@@ -1,0 +1,15 @@
+package perfbench
+
+/** Summary statistics over latency samples. */
+object Stats {
+  /** Linear-interpolated quantile (the numpy default), q in [0, 1]. */
+  def quantile(xs: Seq[Double], q: Double): Double = {
+    require(xs.nonEmpty, "quantile of no samples")
+    val s = xs.sorted.toIndexedSeq
+    val pos = q * (s.length - 1)
+    val lo = math.floor(pos).toInt
+    val hi = math.min(lo + 1, s.length - 1)
+    s(lo) + (s(hi) - s(lo)) * (pos - lo)
+  }
+  def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
+}
