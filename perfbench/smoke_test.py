@@ -13,7 +13,7 @@ import sys
 
 OWN = {
     "point-search": ["point_p50_ms", "point_p99_ms", "point_samples", "batch_qps", "batch_samples"],
-    "bulk-knn": ["selfjoin_vps", "bucket_join_qps", "bucket_join_p50_ms", "join_samples"],
+    "bulk-knn": ["selfjoin_vps", "bucket_join_qps", "bucket_join_p50_ms", "selfjoin_samples", "join_samples"],
     "store-churn": ["upsert_docs_per_s", "wave_p50_s", "wave_samples", "serve_p50_ms",
                     "serve_p95_ms", "serve_samples", "ann_serve_p50_ms", "bm25_serve_p50_ms"],
 }
