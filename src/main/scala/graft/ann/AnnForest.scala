@@ -10,11 +10,14 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 
 
-/** Hyperplane in implicit form n·x + c = 0 (reference src/hyperplane.rs:3-6). */
 /** One hit of the SQL knn face — a named struct so SQL reads
   * `h.neighbor_id` / `h.dist` instead of `_1` / `_2`. */
 case class KnnHit(neighbor_id: Long, dist: Double)
 
+/** Hyperplane in implicit form n·x + c = 0 (reference src/hyperplane.rs:3-6).
+  * [[DistributedAnnForest]]'s plane map holds these; the driver-side
+  * forest keeps its planes flat in [[CompactIndex]] with the same
+  * arithmetic. */
 case class HyperPlane(coefficients: Array[Float], constant: Float) extends Serializable {
   /** Signed unnormalized margin n·x + c. Accumulates in double — the
     * reference sums f32, a documented precision divergence that only
@@ -44,16 +47,11 @@ case class HyperPlane(coefficients: Array[Float], constant: Float) extends Seria
   }
 }
 
-/** Binary space-partition tree ADT (reference src/tree.rs:3-14). Leaves
-  * hold positions into the dedup'd store, not external ids
-  * (reference src/lib.rs:90-91). */
-sealed trait Node extends Serializable
-final case class Inner(plane: HyperPlane, left: Node, right: Node) extends Node
-final case class Leaf(rows: Array[Int]) extends Node
-
 /** The fitted index (reference ANNIndex, src/lib.rs:15-19): a forest of
-  * random-bisector trees + the dedup'd store. `ids(i)` is the external id
-  * of `vectors(i)`.
+  * random-bisector trees + the dedup'd store, held once, as the
+  * primitive arrays of [[compact]]. `ids(i)` is the external id of
+  * stored row i; leaves hold row positions, not external ids
+  * (reference src/lib.rs:90-91).
   *
   * Scale shape: the *forest* (hyperplanes only, ~numTrees·(n/maxLeaf)·dim
   * floats) is broadcast — the analog of a broadcast-hash-join build side.
@@ -63,22 +61,23 @@ final case class Leaf(rows: Array[Int]) extends Node
   * [[AnnForestModel.assignLeaves]] so that at 100 TB the store stays a
   * DataFrame and candidate matching becomes a co-partitioned
   * (treeId, leafId) equi-join instead of a broadcast lookup.
+  *
+  * `compact` is the model's only in-memory form: [[AnnForest.fit]] (or
+  * [[AnnForestModel.load]]) writes it, every search reads it, and the
+  * broadcasts below ship it (or its structure-only copy) directly,
+  * never `this`.
   */
 class AnnForestModel(
-    val trees: Seq[Node],
-    val ids: Array[Long],
-    val vectors: Array[Array[Float]],
+    val compact: CompactIndex,
     val metric: String = "euclidean") extends Serializable {
+
+  /** External id of each stored row. */
+  def ids: Array[Long] = compact.ids
 
   /** Normalize a query when the model is cosine-metric (the store was
     * normalized at fit; dist = 2·(1−cos) on the unit sphere). */
   private[ann] def prepQuery(q: Array[Float]): Array[Float] =
     if (metric != "cosine") q else AnnForestModel.l2NormalizeJvm(q)
-
-  /** Primitive-array form used for every search/broadcast — built once,
-    * NOT serialized with the model (rebuilt cheaply where needed; the
-    * broadcasts below ship the compact form directly, never `this`). */
-  @transient lazy val compact: CompactIndex = CompactIndex.build(trees, ids, vectors)
 
   // Broadcasts are cached per model: searchBatch / assignLeaves are
   // called repeatedly against a standing model (every batch of a
@@ -366,46 +365,54 @@ class AnnForestModel(
   }
 
   /** Persist the fitted model as plain parquet (portable, splittable):
-    * a flattened node table + the dedup'd store. */
+    * a flattened node table + the dedup'd store. Node i of [[compact]]
+    * is row `nodeId = i` (global preorder, trees in order), so the rows
+    * come straight from the arrays. */
   def save(path: String, spark: SparkSession): Unit = {
     import spark.implicits._
-    val nodes = scala.collection.mutable.ArrayBuffer.empty[FlatNode]
-    trees.zipWithIndex.foreach { case (root, ti) =>
-      def walk(n: Node): Int = {
-        val myId = nodes.length
-        n match {
-          case Leaf(rows) =>
-            nodes += FlatNode(ti, myId, isLeaf = true, None, None, -1, -1, rows)
-          case Inner(plane, left, right) =>
-            nodes += FlatNode(ti, myId, isLeaf = false,
-              Some(plane.coefficients), Some(plane.constant), -1, -1, Array.empty)
-            val l = walk(left); val r = walk(right)
-            nodes(myId) = nodes(myId).copy(leftId = l, rightId = r)
+    val c = compact
+    // every builder lays tree t out as nodes [roots(t), roots(t + 1))
+    val nodes = c.roots.indices.flatMap { t =>
+      val end = if (t + 1 < c.roots.length) c.roots(t + 1) else c.left.length
+      (c.roots(t) until end).map { i =>
+        if (c.left(i) < 0)
+          FlatNode(t, i, isLeaf = true, None, None, -1, -1,
+            c.leafRows.slice(c.leafOff(i), c.leafOff(i) + c.leafLen(i)))
+        else {
+          val p = c.planeIdx(i)
+          FlatNode(t, i, isLeaf = false,
+            Some(c.planeCoef.slice(p * c.dim, (p + 1) * c.dim)), Some(c.planeConst(p)),
+            c.left(i), c.right(i), Array.empty)
         }
-        myId
       }
-      walk(root)
     }
-    nodes.toSeq.toDS().write.mode("overwrite").parquet(s"$path/nodes")
+    nodes.toDS().write.mode("overwrite").parquet(s"$path/nodes")
     // leaf rows index the store by POSITION — persist it explicitly,
     // parquet read order is not guaranteed
-    ids.zip(vectors).zipWithIndex
-      .map { case ((id, vec), pos) => (pos, id, vec) }.toSeq
+    c.ids.indices
+      .map(pos => (pos, c.ids(pos), c.vecs.slice(pos * c.dim, (pos + 1) * c.dim)))
       .toDF("pos", "id", "vec")
       .write.mode("overwrite").parquet(s"$path/store")
     Seq(metric).toDF("metric").write.mode("overwrite").parquet(s"$path/meta")
   }
 }
 
-/** Compact primitive-array index: the broadcast/search representation.
+/** Compact primitive-array index: the forest's only in-memory form, and
+  * the broadcast/search representation.
   *
-  * The object-tree form (2M boxed `Node`s at 200k rows × 50 trees) costs
-  * tens of seconds in Java serialization per broadcast and pointer-chases
-  * during traversal; this layout is a handful of primitive arrays —
+  * A boxed object tree (2M nodes at 200k rows × 50 trees) costs tens of
+  * seconds in Java serialization per broadcast and pointer-chases during
+  * traversal; this layout is a handful of primitive arrays —
   * serialization is a memcpy, traversal is array indexing, and the
   * vector store is ONE flat float array (row r at offset r·dim).
-  * Semantics are identical to the tree walk (first-n leaf take,
+  * Traversal follows the reference's tree walk (first-n leaf take,
   * shortfall spill, ties above — reference src/lib.rs:105-128).
+  *
+  * Layout: tree t occupies nodes [roots(t), roots(t + 1)) in preorder,
+  * left (below) subtree first; planes are numbered in the same order and
+  * each leaf's rows are the next `leafLen` entries of `leafRows`; inner
+  * nodes have leafOff = leafLen = 0. Built by [[CompactIndex.concat]]
+  * over per-tree [[TreeBuffers]].
   */
 final class CompactIndex(
     val roots: Array[Int],
@@ -629,50 +636,112 @@ final class CompactIndex(
 }
 
 object CompactIndex {
-  def build(trees: Seq[Node], ids: Array[Long], vectors: Array[Array[Float]]): CompactIndex = {
-    val dim = if (vectors.nonEmpty) vectors(0).length else 0
+  /** Joins per-tree buffers, in tree order, into one index over the
+    * store (`ids`, row-major `vecs` of nRows × dim), shifting each
+    * tree's node, plane and leaf-row offsets past the trees before it. */
+  def concat(trees: Seq[TreeBuffers], ids: Array[Long], vecs: Array[Float], dim: Int): CompactIndex = {
+    val nNodes = trees.map(_.nodeCount).sum
+    val nPlanes = trees.map(_.planeCount).sum
     val roots = new Array[Int](trees.length)
-    import scala.collection.mutable.ArrayBuffer
-    val aLeft = ArrayBuffer.empty[Int]
-    val aRight = ArrayBuffer.empty[Int]
-    val aPlaneIdx = ArrayBuffer.empty[Int]
-    val aPlaneCoef = ArrayBuffer.empty[Float]
-    val aPlaneConst = ArrayBuffer.empty[Float]
-    val aLeafOff = ArrayBuffer.empty[Int]
-    val aLeafLen = ArrayBuffer.empty[Int]
-    val aLeafRows = ArrayBuffer.empty[Int]
-    def walk2(n: Node): Int = {
-      val myId = aLeft.length
-      n match {
-        case Leaf(rows) =>
-          aLeft += -1; aRight += -1; aPlaneIdx += -1
-          aLeafOff += aLeafRows.length; aLeafLen += rows.length
-          aLeafRows ++= rows
-        case Inner(plane, l, r) =>
-          aLeft += 0; aRight += 0
-          aPlaneIdx += aPlaneConst.length
-          aPlaneCoef ++= plane.coefficients
-          aPlaneConst += plane.constant
-          aLeafOff += 0; aLeafLen += 0
-          val li = walk2(l)
-          val ri = walk2(r)
-          aLeft(myId) = li
-          aRight(myId) = ri
+    val left = new Array[Int](nNodes)
+    val right = new Array[Int](nNodes)
+    val planeIdx = new Array[Int](nNodes)
+    val leafOff = new Array[Int](nNodes)
+    val leafLen = new Array[Int](nNodes)
+    val planeCoef = new Array[Float](nPlanes * dim)
+    val planeConst = new Array[Float](nPlanes)
+    val leafRows = new Array[Int](trees.map(_.rows.length).sum)
+    var nodeBase = 0
+    var planeBase = 0
+    var rowBase = 0
+    trees.iterator.zipWithIndex.foreach { case (t, ti) =>
+      roots(ti) = nodeBase
+      var i = 0
+      while (i < t.nodeCount) {
+        val g = nodeBase + i
+        if (t.left(i) < 0) {
+          left(g) = -1; right(g) = -1; planeIdx(g) = -1
+          leafOff(g) = rowBase + t.leafOff(i)
+          leafLen(g) = t.leafLen(i)
+        } else {
+          // a child is never its tree's root: 0 means never linked
+          require(t.left(i) > 0 && t.right(i) > 0, s"tree $ti: inner node $i has no children")
+          left(g) = nodeBase + t.left(i)
+          right(g) = nodeBase + t.right(i)
+          planeIdx(g) = planeBase + t.planeIdx(i)
+        }
+        i += 1
       }
-      myId
+      System.arraycopy(t.coef, 0, planeCoef, planeBase * dim, t.planeCount * dim)
+      System.arraycopy(t.const, 0, planeConst, planeBase, t.planeCount)
+      System.arraycopy(t.rows, 0, leafRows, rowBase, t.rows.length)
+      nodeBase += t.nodeCount
+      planeBase += t.planeCount
+      rowBase += t.rows.length
     }
-    trees.zipWithIndex.foreach { case (t, i) => roots(i) = walk2(t) }
-    val flatVecs = new Array[Float](vectors.length * dim)
-    var r = 0
-    while (r < vectors.length) {
-      System.arraycopy(vectors(r), 0, flatVecs, r * dim, dim)
-      r += 1
+    new CompactIndex(roots, left, right, planeIdx, planeCoef, planeConst,
+      leafOff, leafLen, leafRows, ids, vecs, dim)
+  }
+}
+
+/** One tree of a [[CompactIndex]] under construction: growable primitive
+  * node and plane buffers with tree-local ids, plus `rows`, the tree's
+  * leaf-row order — leaf nodes are ranges of it. Append nodes in
+  * preorder (an inner node, then its left subtree, then its right) and
+  * planes in the order of their inner nodes; [[CompactIndex.concat]]
+  * then joins the trees. */
+final class TreeBuffers(dim: Int, val rows: Array[Int]) {
+  private[ann] var left = new Array[Int](16)
+  private[ann] var right = new Array[Int](16)
+  private[ann] var planeIdx = new Array[Int](16)
+  private[ann] var leafOff = new Array[Int](16)
+  private[ann] var leafLen = new Array[Int](16)
+  private[ann] var coef = new Array[Float](16 * dim)
+  private[ann] var const = new Array[Float](16)
+  private var nodes = 0
+  private var planes = 0
+
+  def nodeCount: Int = nodes
+  def planeCount: Int = planes
+
+  private def addNode(l: Int, r: Int, plane: Int, off: Int, len: Int): Int = {
+    if (nodes == left.length) {
+      val cap = 2 * nodes
+      left = java.util.Arrays.copyOf(left, cap)
+      right = java.util.Arrays.copyOf(right, cap)
+      planeIdx = java.util.Arrays.copyOf(planeIdx, cap)
+      leafOff = java.util.Arrays.copyOf(leafOff, cap)
+      leafLen = java.util.Arrays.copyOf(leafLen, cap)
     }
-    new CompactIndex(
-      roots, aLeft.toArray, aRight.toArray, aPlaneIdx.toArray,
-      aPlaneCoef.toArray, aPlaneConst.toArray,
-      aLeafOff.toArray, aLeafLen.toArray, aLeafRows.toArray,
-      ids, flatVecs, dim)
+    left(nodes) = l; right(nodes) = r; planeIdx(nodes) = plane
+    leafOff(nodes) = off; leafLen(nodes) = len
+    nodes += 1
+    nodes - 1
+  }
+
+  /** Appends plane n·x + c = 0, copying n from `coefs(0 until dim)`;
+    * returns its tree-local index. */
+  def addPlane(coefs: Array[Float], c: Float): Int = {
+    if (planes == const.length) {
+      coef = java.util.Arrays.copyOf(coef, 2 * planes * dim)
+      const = java.util.Arrays.copyOf(const, 2 * planes)
+    }
+    System.arraycopy(coefs, 0, coef, planes * dim, dim)
+    const(planes) = c
+    planes += 1
+    planes - 1
+  }
+
+  /** Appends a leaf over `rows(off until off + len)`; returns its id. */
+  def leaf(off: Int, len: Int): Int = addNode(-1, -1, -1, off, len)
+
+  /** Appends an inner node splitting on `plane`; [[link]] sets its
+    * children once they are appended. Returns its id. */
+  def inner(plane: Int): Int = addNode(0, 0, plane, 0, 0)
+
+  def link(node: Int, below: Int, above: Int): Unit = {
+    left(node) = below
+    right(node) = above
   }
 }
 
@@ -698,37 +767,43 @@ object AnnForestModel {
     }
   }
 
-  /** Load a model persisted by [[AnnForestModel.save]]. */
+  /** Load a model persisted by [[AnnForestModel.save]]: node rows in
+    * `nodeId` order refill the same per-tree buffers [[AnnForest.fit]]
+    * writes, so a loaded model's arrays equal the saved one's. */
   def load(path: String, spark: SparkSession): AnnForestModel = {
     import spark.implicits._
-    val flat = spark.read.parquet(s"$path/nodes").as[FlatNode]
-      .collect().groupBy(_.treeId)
-    val trees = flat.keys.toSeq.sorted.map { ti =>
-      val byId = flat(ti).map(n => n.nodeId -> n).toMap
-      def build(id: Int): Node = {
-        val n = byId(id)
-        if (n.isLeaf) Leaf(n.leafRows)
-        else Inner(HyperPlane(n.coeffs.get, n.constant.get), build(n.leftId), build(n.rightId))
-      }
-      build(flat(ti).map(_.nodeId).min)
-    }
     val store = spark.read.parquet(s"$path/store")
       .select(col("pos"), col("id").cast("long"), col("vec"))
+      .as[(Int, Long, Array[Float])]
       .collect()
-      .sortBy(_.getInt(0))
-      .map(r => (r.getLong(1), r.getSeq[Float](2).toArray))
-    // only ABSENCE of meta falls back (pre-metric saves) — a failed read
-    // of an existing meta must not silently degrade cosine to euclidean
+      .sortBy(_._1)
+    val dim = if (store.nonEmpty) store(0)._3.length else 0
+    val vecs = new Array[Float](store.length * dim)
+    store.iterator.zipWithIndex.foreach { case ((_, _, v), r) =>
+      System.arraycopy(v, 0, vecs, r * dim, dim)
+    }
+    val byTree = spark.read.parquet(s"$path/nodes").as[FlatNode]
+      .collect().sortBy(_.nodeId).groupBy(_.treeId)
+    val trees = byTree.keys.toSeq.sorted.map { ti =>
+      val ns = byTree(ti) // nodeId order = preorder
+      val local = ns.iterator.map(_.nodeId).zipWithIndex.toMap
+      val tree = new TreeBuffers(dim, ns.filter(_.isLeaf).flatMap(_.leafRows))
+      var off = 0
+      ns.foreach { n =>
+        if (n.isLeaf) { tree.leaf(off, n.leafRows.length); off += n.leafRows.length }
+        else tree.inner(tree.addPlane(n.coeffs.get, n.constant.get))
+      }
+      ns.foreach { n => if (!n.isLeaf) tree.link(local(n.nodeId), local(n.leftId), local(n.rightId)) }
+      tree
+    }
+    // only ABSENCE of meta falls back (pre-metric saves); asked of the
+    // path's own FileSystem, so any Hadoop URI (file:/x, hdfs://…) works
+    val meta = new org.apache.hadoop.fs.Path(s"$path/meta")
     val metric =
-      if (new java.io.File(s"$path/meta").exists() ||
-          path.contains("://")) // non-local FS: attempt the read
-        try spark.read.parquet(s"$path/meta").head().getString(0)
-        catch {
-          case e: org.apache.spark.sql.AnalysisException if e.getMessage.contains("PATH_NOT_FOUND") =>
-            "euclidean"
-        }
+      if (meta.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(meta))
+        spark.read.parquet(s"$path/meta").head().getString(0)
       else "euclidean"
-    new AnnForestModel(trees, store.map(_._1), store.map(_._2), metric)
+    new AnnForestModel(CompactIndex.concat(trees, store.map(_._2), vecs, dim), metric)
   }
 }
 
@@ -751,53 +826,92 @@ case class AnnForest(
   require(metric == "euclidean" || metric == "cosine",
     s"metric must be euclidean|cosine, got $metric")
 
-  /** Bisector plane of two sampled points a, b: n = b − a, passes through
-    * the midpoint, c = −n·mid (reference build_hyperplane,
-    * src/lib.rs:22-48; kernel arg-order quirk a.subtract_from(b) = b − a,
-    * src/vector.rs:8-12). */
-  private[ann] def buildHyperplane(
-      idx: Array[Int], vecs: Array[Array[Float]], rng: Random): (HyperPlane, Array[Int], Array[Int]) = {
-    val dim = vecs(idx(0)).length
-    // sample two distinct positions (reference choose_multiple(2), src/lib.rs:26-28)
-    val ai = rng.nextInt(idx.length)
-    var bi = rng.nextInt(idx.length)
-    var tries = 0
-    while (bi == ai && tries < 8) { bi = rng.nextInt(idx.length); tries += 1 }
-    val a = vecs(idx(ai)); val b = vecs(idx(math.max(0, if (bi == ai) (ai + 1) % idx.length else bi)))
-    val n = new Array[Float](dim)
-    var i = 0
-    while (i < dim) { n(i) = b(i) - a(i); i += 1 }
-    var c = 0.0
-    i = 0
-    while (i < dim) { c += n(i).toDouble * ((a(i).toDouble + b(i).toDouble) / 2.0); i += 1 }
-    val plane = HyperPlane(n, (-c).toFloat)
-    val above = Array.newBuilder[Int]
-    val below = Array.newBuilder[Int]
-    idx.foreach { id => if (plane.isAbove(vecs(id))) above += id else below += id }
-    (plane, below.result(), above.result())
-  }
+  /** Builds tree `t` over the `n` rows of the flat store `vecs`
+    * (reference build_a_tree, src/lib.rs:50-62) straight into a
+    * [[TreeBuffers]]: leaf at ≤ maxLeafSize rows; left = below,
+    * right = above. Each split stably partitions a range of the tree's
+    * row order in place — below first, in order — so every subtree, and
+    * so every leaf, is a contiguous range of it, in preorder. Guards the
+    * reference's infinite-recursion hazard (identical/degenerate splits)
+    * with a forced leaf — the reference relies on dedup alone (SURVEY §7
+    * M3). */
+  private def buildTree(t: Int, vecs: Array[Float], dim: Int, n: Int): TreeBuffers = {
+    val tree = new TreeBuffers(dim, Array.range(0, n))
+    val rows = tree.rows
+    val rng = new Random(seed * 1000003L + t)
+    val plane = new Array[Float](dim) // the split being tried
+    val aboveRows = new Array[Int](n) // partition spill
 
-  /** Recursive build (reference build_a_tree, src/lib.rs:50-62): leaf at
-    * ≤ maxLeafSize; left=below, right=above. Guards the reference's
-    * infinite-recursion hazard (identical/degenerate splits) with a
-    * forced leaf — the reference relies on dedup alone (SURVEY §7 M3). */
-  private[ann] def buildTree(
-      idx: Array[Int], vecs: Array[Array[Float]], rng: Random, depth: Int = 0): Node = {
-    // depth cap 62: assignLeaves encodes the root-to-leaf path as a
-    // 1-sentinel + one bit per level breadcrumb in a LONG — 62 levels
-    // keeps it within 63 bits (overflow would silently merge buckets)
-    if (idx.length <= maxLeafSize || depth >= 62) Leaf(idx)
-    else {
-      val (plane, below, above) = buildHyperplane(idx, vecs, rng)
-      if (below.isEmpty || above.isEmpty) Leaf(idx) // degenerate split guard
-      else Inner(plane, buildTree(below, vecs, rng, depth + 1), buildTree(above, vecs, rng, depth + 1))
+    // Bisector plane of two sampled rows a, b of rows[lo, lo + len)
+    // into `plane`: n = b − a, through the midpoint, c = −n·mid
+    // (reference build_hyperplane, src/lib.rs:22-48; kernel arg-order
+    // quirk a.subtract_from(b) = b − a, src/vector.rs:8-12). Returns c.
+    def bisect(lo: Int, len: Int): Float = {
+      // sample two distinct positions (reference choose_multiple(2), src/lib.rs:26-28)
+      val ai = rng.nextInt(len)
+      var bi = rng.nextInt(len)
+      var tries = 0
+      while (bi == ai && tries < 8) { bi = rng.nextInt(len); tries += 1 }
+      val a = rows(lo + ai) * dim
+      val b = rows(lo + math.max(0, if (bi == ai) (ai + 1) % len else bi)) * dim
+      var c = 0.0
+      var i = 0
+      while (i < dim) {
+        plane(i) = vecs(b + i) - vecs(a + i)
+        c += plane(i).toDouble * ((vecs(a + i).toDouble + vecs(b + i).toDouble) / 2.0)
+        i += 1
+      }
+      (-c).toFloat
     }
+
+    // Stable partition of rows[lo, hi) by `plane`: below first, ties
+    // above (HyperPlane.isAbove's arithmetic). Returns the first above index.
+    def partition(lo: Int, hi: Int, c: Float): Int = {
+      var below = lo
+      var nAbove = 0
+      var k = lo
+      while (k < hi) {
+        val r = rows(k)
+        val base = r * dim
+        var acc = 0.0
+        var i = 0
+        while (i < dim) { acc += plane(i).toDouble * vecs(base + i); i += 1 }
+        if (acc + c >= 0.0) { aboveRows(nAbove) = r; nAbove += 1 }
+        else { rows(below) = r; below += 1 }
+        k += 1
+      }
+      System.arraycopy(aboveRows, 0, rows, below, nAbove)
+      below
+    }
+
+    def grow(lo: Int, hi: Int, depth: Int): Int = {
+      val len = hi - lo
+      // depth cap 62: assignLeaves encodes the root-to-leaf path as a
+      // 1-sentinel + one bit per level breadcrumb in a LONG — 62 levels
+      // keeps it within 63 bits (overflow would silently merge buckets)
+      if (len <= maxLeafSize || depth >= 62) tree.leaf(lo, len)
+      else {
+        val c = bisect(lo, len)
+        val mid = partition(lo, hi, c)
+        if (mid == lo || mid == hi) tree.leaf(lo, len) // degenerate split guard
+        else {
+          val node = tree.inner(tree.addPlane(plane, c))
+          tree.link(node, grow(lo, mid, depth + 1), grow(mid, hi, depth + 1))
+          node
+        }
+      }
+    }
+
+    grow(0, n, 0)
+    tree
   }
 
   /** Fit on (idCol LONG, vecCol ARRAY<FLOAT>). Bit-exact dedup first
     * (reference src/lib.rs:87-88, minus its drop-row-0 bug), then
-    * numTrees independent trees in parallel. With metric="cosine" the
-    * store is L2-normalized at ingest — searches then rank by cosine
+    * numTrees independent trees in parallel, each written straight into
+    * primitive buffers and joined into the model's [[CompactIndex]] —
+    * the store is held once, in its flat array. With metric="cosine"
+    * the store is L2-normalized at ingest — searches then rank by cosine
     * (returned dist = 2·(1−cos); models normalize queries themselves).
     *
     * Driver memory is bounded by the RAW row count, duplicates
@@ -806,6 +920,7 @@ case class AnnForest(
     * fits the driver but raw size doesn't, run [[Dedup.exactVectors]]
     * first — or use [[DistributedAnnForest]], the scale path. */
   def fit(df: DataFrame, idCol: String = "vec_id", vecCol: String = "embedding"): AnnForestModel = {
+    import df.sparkSession.implicits._
     // This path collects the store to the driver by design (reference
     // memory model) — so dedup AFTER the collect, on the driver: same
     // first-seen-wins bit-exact semantics as Dedup.exactVectors (min id
@@ -815,28 +930,52 @@ case class AnnForest(
     // distributed dedup + build is DistributedAnnForest.
     val collected = df
       .select(col(idCol).cast(LongType), col(vecCol).cast(ArrayType(FloatType)))
+      .as[(Long, Array[Float])]
       .collect()
-    val byKey = new java.util.HashMap[java.util.List[Integer], (Long, Array[Float])]()
-    collected.foreach { r =>
-      val id = r.getLong(0)
-      val vec = r.getSeq[Float](1).toArray
-      val key = new java.util.ArrayList[Integer](vec.length)
-      vec.foreach(f => key.add(java.lang.Float.floatToRawIntBits(f)))
-      val prev = byKey.get(key)
-      if (prev == null || id < prev._1) byKey.put(key, (id, vec))
+    val minId = new java.util.HashMap[RawBits, java.lang.Long]()
+    collected.foreach { case (id, vec) =>
+      val key = new RawBits(vec)
+      val prev = minId.get(key)
+      if (prev == null || id < prev) minId.put(key, id)
     }
     import scala.jdk.CollectionConverters._
-    val deduped = byKey.values().asScala.toArray
-      .sortBy(_._1) // deterministic store order = deterministic leaves
-    val ids = deduped.map(_._1)
-    val raw = deduped.map(_._2)
-    val vecs =
-      if (metric == "cosine") raw.map(AnnForestModel.l2NormalizeJvm) else raw
-    val positions = Array.range(0, vecs.length)
+    val deduped = minId.entrySet().asScala.toArray
+      .sortBy(_.getValue.longValue) // deterministic store order = deterministic leaves
+    val ids = deduped.map(_.getValue.longValue)
+    val dim = if (deduped.nonEmpty) deduped(0).getKey.vec.length else 0
+    val vecs = new Array[Float](ids.length * dim)
+    deduped.iterator.zipWithIndex.foreach { case (e, r) =>
+      val raw = e.getKey.vec
+      require(raw.length == dim, s"$vecCol: row ${ids(r)} has ${raw.length} dims, expected $dim")
+      val v = if (metric == "cosine") AnnForestModel.l2NormalizeJvm(raw) else raw
+      System.arraycopy(v, 0, vecs, r * dim, dim)
+    }
     import scala.collection.parallel.CollectionConverters._
-    val trees = (0 until numTrees).par.map { t =>
-      buildTree(positions, vecs, new Random(seed * 1000003L + t))
-    }.seq
-    new AnnForestModel(trees, ids, vecs, metric)
+    val trees = (0 until numTrees).par.map(t => buildTree(t, vecs, dim, ids.length)).seq
+    new AnnForestModel(CompactIndex.concat(trees, ids, vecs, dim), metric)
+  }
+}
+
+/** Dedup key over a vector's raw float bits: two keys are equal iff every
+  * `floatToRawIntBits` matches, so -0.0 ≠ 0.0 and distinct NaN payloads
+  * stay distinct (not `Arrays.equals`, which merges NaNs). */
+private final class RawBits(val vec: Array[Float]) {
+  override val hashCode: Int = {
+    var h = 1
+    var i = 0
+    while (i < vec.length) { h = 31 * h + java.lang.Float.floatToRawIntBits(vec(i)); i += 1 }
+    h
+  }
+
+  override def equals(o: Any): Boolean = o match {
+    case k: RawBits =>
+      k.vec.length == vec.length && {
+        var i = 0
+        while (i < vec.length &&
+            java.lang.Float.floatToRawIntBits(vec(i)) == java.lang.Float.floatToRawIntBits(k.vec(i)))
+          i += 1
+        i == vec.length
+      }
+    case _ => false
   }
 }

@@ -12,6 +12,25 @@ class AnnForestSpec extends SparkSpec {
   lazy val model = AnnForest(numTrees = 50, maxLeafSize = 5, seed = 42L)
     .fit(emb, "vec_id", "embedding")
 
+  /** SHA-256 over every layout array of `c`, floats as raw bits — pins
+    * the builder's output bit for bit. */
+  private def layoutDigest(c: CompactIndex): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val out = new java.io.DataOutputStream(new java.security.DigestOutputStream(
+      java.io.OutputStream.nullOutputStream(), md))
+    def ints(a: Array[Int]): Unit = { out.writeInt(a.length); a.foreach(out.writeInt) }
+    def floats(a: Array[Float]): Unit = {
+      out.writeInt(a.length); a.foreach(f => out.writeInt(java.lang.Float.floatToRawIntBits(f)))
+    }
+    ints(c.roots); ints(c.left); ints(c.right); ints(c.planeIdx)
+    floats(c.planeCoef); floats(c.planeConst)
+    ints(c.leafOff); ints(c.leafLen); ints(c.leafRows)
+    out.writeInt(c.ids.length); c.ids.foreach(out.writeLong)
+    floats(c.vecs); out.writeInt(c.dim)
+    out.flush()
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
   test("hyperplane bisector math matches hand computation") {
     // a=(0,0), b=(2,0): n=(2,0), mid=(1,0), c=-2 → plane 2x-2=0 (x=1)
     val plane = HyperPlane(Array(2f, 0f), -2f)
@@ -22,9 +41,11 @@ class AnnForestSpec extends SparkSpec {
 
   test("traversal shortfall-spill on a hand-built tree (ref src/lib.rs:105-128)") {
     // x=1 split; left leaf has 1 row, right leaf 3 rows.
-    val tree = Inner(HyperPlane(Array(1f), -1f), Leaf(Array(0)), Leaf(Array(1, 2, 3)))
-    val vecs = Array(Array(0f), Array(2f), Array(3f), Array(4f))
-    val m = new AnnForestModel(Seq(tree), Array(10L, 11L, 12L, 13L), vecs)
+    val tree = new TreeBuffers(dim = 1, rows = Array(0, 1, 2, 3))
+    val root = tree.inner(tree.addPlane(Array(1f), -1f))
+    tree.link(root, tree.leaf(0, 1), tree.leaf(1, 3))
+    val m = new AnnForestModel(CompactIndex.concat(
+      Seq(tree), Array(10L, 11L, 12L, 13L), Array(0f, 2f, 3f, 4f), dim = 1))
     // query below the plane wants 3: main leaf gives 1, spills 2 from sibling
     val got = m.search(Array(0.5f), 3).map(_._1).toSet
     assert(got.contains(10L))
@@ -156,7 +177,22 @@ class AnnForestSpec extends SparkSpec {
     val loaded = AnnForestModel.load(dir, spark)
     val q = emb.filter($"vec_id" === 11L).head().getSeq[Float](1).toArray
     assert(loaded.search(q, 10).toSeq === small.search(q, 10).toSeq)
-    assert(loaded.trees.size === 8)
+    assert(loaded.compact.roots.length === 8)
+    assert(layoutDigest(loaded.compact) === layoutDigest(small.compact))
+    // the on-disk node table (rows in nodeId order, every field), pinned
+    // at its value under the object-tree save: the format is unchanged
+    val rows = spark.read.parquet(s"$dir/nodes").as[FlatNode].collect().sortBy(_.nodeId)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    rows.foreach { n =>
+      md.update(Seq(n.treeId, n.nodeId, n.leftId, n.rightId, if (n.isLeaf) 1 else 0,
+          n.constant.map(java.lang.Float.floatToRawIntBits).getOrElse(-7))
+        .mkString("", ",", ";").getBytes("UTF-8"))
+      n.coeffs.foreach(cs => md.update(
+        cs.map(java.lang.Float.floatToRawIntBits).mkString(",").getBytes("UTF-8")))
+      md.update(n.leafRows.mkString("[", ",", "]").getBytes("UTF-8"))
+    }
+    assert(md.digest().map(b => f"$b%02x").mkString ===
+      "863e794030fca0c38a6a2ee5b8398f7562328f7dd860d89e250080115751641f")
   }
 
   test("cosine metric: ANN recall >= 0.8 vs brute-force cosine oracle; roundtrips metric") {
@@ -185,6 +221,18 @@ class AnnForestSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_cos").toString
     cosModel.save(dir, spark)
     assert(AnnForestModel.load(dir, spark).metric === "cosine")
+  }
+
+  test("cosine metric survives save/load under a file: URI path") {
+    val cosModel = AnnForest(numTrees = 8, maxLeafSize = 5, seed = 5L, metric = "cosine")
+      .fit(emb, "vec_id", "embedding")
+    // `file:/dir/…` is a valid Hadoop URI with no `//`
+    val dir = "file:" + java.nio.file.Files.createTempDirectory("graft_cos_uri").toString
+    cosModel.save(dir, spark)
+    val loaded = AnnForestModel.load(dir, spark)
+    assert(loaded.metric === "cosine")
+    val q = emb.filter($"vec_id" === 11L).head().getSeq[Float](1).toArray
+    assert(loaded.search(q, 10).toSeq === cosModel.search(q, 10).toSeq)
   }
 
   test("cosine metric: dedup is on RAW vectors (colinear distinct ids both kept)") {
@@ -348,6 +396,41 @@ class AnnForestSpec extends SparkSpec {
     val rec = got.size.toDouble / exact.size
     info(f"cosine radius recall = $rec%.3f (${got.size}/${exact.size})")
     assert(rec >= 0.7)
+  }
+
+  test("fitted layout is pinned bit for bit (euclidean 50-tree, cosine 8-tree)") {
+    // recorded from the earlier object-tree builder; the flat builder
+    // must reproduce every array bit for bit
+    assert(layoutDigest(model.compact) ===
+      "23382436678650b2f112febbf3f72e1ac618addb67f0b4a9d88d8dbff4f42270")
+    val cos = AnnForest(numTrees = 8, maxLeafSize = 5, seed = 5L, metric = "cosine")
+      .fit(emb, "vec_id", "embedding")
+    assert(layoutDigest(cos.compact) ===
+      "685eb5823ebe41322cbb790e891c1d5f53fd8049386ebf85bd42507b18cb5622")
+  }
+
+  test("empty and single-row frames: search, searchBatch and save/load") {
+    val queries = Seq((1L, Array(0f, 0f))).toDF("query_id", "qvec")
+    val empty = AnnForest(numTrees = 3, maxLeafSize = 5, seed = 1L)
+      .fit(Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"))
+    val one = AnnForest(numTrees = 3, maxLeafSize = 5, seed = 1L)
+      .fit(Seq((7L, Array(1f, 2f))).toDF("vec_id", "embedding"))
+    def roundtrip(m: AnnForestModel): AnnForestModel = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_ann_edge").toString
+      m.save(dir, spark)
+      AnnForestModel.load(dir, spark)
+    }
+    for (m <- Seq(empty, roundtrip(empty))) {
+      assert(m.ids.isEmpty)
+      assert(m.search(Array(0f, 0f), 5).isEmpty)
+      assert(m.searchBatch(queries, 5).count() === 0)
+    }
+    for (m <- Seq(one, roundtrip(one))) {
+      assert(m.ids.toSeq === Seq(7L))
+      assert(m.search(Array(0f, 0f), 5).toSeq === Seq((7L, 5.0)))
+      assert(m.searchBatch(queries, 5).as[(Long, Long, Double, Int)].collect().toSeq ===
+        Seq((1L, 7L, 5.0, 1)))
+    }
   }
 
   test("degenerate corpus (all-identical vectors) terminates via dedup+guard") {
