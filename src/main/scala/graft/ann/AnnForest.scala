@@ -77,7 +77,7 @@ class AnnForestModel(
   /** Normalize a query when the model is cosine-metric (the store was
     * normalized at fit; dist = 2·(1−cos) on the unit sphere). */
   private[ann] def prepQuery(q: Array[Float]): Array[Float] =
-    if (metric != "cosine") q else AnnForestModel.l2NormalizeJvm(q)
+    if (q == null || metric != "cosine") q else AnnForestModel.l2NormalizeJvm(q)
 
   // Broadcasts are cached per model: searchBatch / assignLeaves are
   // called repeatedly against a standing model (every batch of a
@@ -139,16 +139,12 @@ class AnnForestModel(
       exactName: String = "knn_exact"): Unit = {
     val bc = cachedBroadcast(spark, structureOnly = false)
     val cosine = metric == "cosine"
-    def prep(v: Seq[Float]): Array[Float] = {
-      val q = v.toArray
-      if (cosine) AnnForestModel.l2NormalizeJvm(q) else q
-    }
     spark.udf.register(name, udf { (v: Seq[Float], k: Int) =>
-      bc.value.search(prep(v), k)
+      bc.value.search(AnnForestModel.queryVector(v, cosine), k)
         .map { case (id, d) => KnnHit(id, d) }.toIndexedSeq
     })
     spark.udf.register(exactName, udf { (v: Seq[Float], k: Int) =>
-      bc.value.searchExact(prep(v), k)
+      bc.value.searchExact(AnnForestModel.queryVector(v, cosine), k)
         .map { case (id, d) => KnnHit(id, d) }.toIndexedSeq
     })
   }
@@ -176,8 +172,7 @@ class AnnForestModel(
       val index = bc.value
       rows.flatMap { r =>
         val qid = r.getLong(0)
-        val q0 = r.getSeq[Float](1).toArray
-        val q = if (cosineMetric) AnnForestModel.l2NormalizeJvm(q0) else q0
+        val q = AnnForestModel.queryVector(r.getSeq[Float](1), cosineMetric)
         index.search(q, topK).iterator.zipWithIndex.map { case ((nid, d), i) =>
           Row(qid, nid, d, i + 1)
         }
@@ -213,8 +208,7 @@ class AnnForestModel(
     val bc = cachedBroadcast(spark, structureOnly = true)
     val cosineMetric = metric == "cosine"
     val leafIdUdf = udf { (v: Seq[Float]) =>
-      val q0 = v.toArray
-      val q = if (cosineMetric) AnnForestModel.l2NormalizeJvm(q0) else q0
+      val q = AnnForestModel.queryVector(v, cosineMetric)
       if (spillEps > 0.0) bc.value.leafPathsSpill(q, spillEps, maxLeavesPerTree).toSeq
       else bc.value.leafPaths(q).toSeq
     }
@@ -408,11 +402,28 @@ class AnnForestModel(
   * Traversal follows the reference's tree walk (first-n leaf take,
   * shortfall spill, ties above — reference src/lib.rs:105-128).
   *
+  * Trees walk four at a time (the reference spreads them over rayon,
+  * src/lib.rs:133-135): each of four lanes holds one tree's walk, and
+  * [[margins]] decides all four lanes' next nodes in one pass over the
+  * query. A single margin is one dependent chain of `dim` double adds
+  * over a plane row far apart in a large array; four lanes run four
+  * independent add chains and read four plane rows at once. Each lane
+  * still sums its plane in index order, so every side decision, and so
+  * every result, is bit-identical to walking the trees one by one. A
+  * lane whose tree is done is refilled with the next tree. The exact
+  * re-rank scores two candidate rows per pass the same way.
+  *
   * Layout: tree t occupies nodes [roots(t), roots(t + 1)) in preorder,
   * left (below) subtree first; planes are numbered in the same order and
   * each leaf's rows are the next `leafLen` entries of `leafRows`; inner
   * nodes have leafOff = leafLen = 0. Built by [[CompactIndex.concat]]
   * over per-tree [[TreeBuffers]].
+  *
+  * Shared read-only by concurrent tasks (it is broadcast), so every
+  * query allocates its own scratch. Every query entry point fails by
+  * name on a null query or one whose length is not `dim`; an index with
+  * no rows and dim 0 (fit on an empty frame) answers any query with
+  * nothing.
   */
 final class CompactIndex(
     val roots: Array[Int],
@@ -425,58 +436,145 @@ final class CompactIndex(
     val ids: Array[Long],
     val vecs: Array[Float],                          // nRows × dim
     val dim: Int) extends Serializable {
+  import CompactIndex.Lanes
 
-  private def signedMargin(plane: Int, q: Array[Float]): Double = {
-    var acc = 0.0
-    val base = plane * dim
-    var i = 0
-    while (i < dim) { acc += planeCoef(base + i).toDouble * q(i); i += 1 }
-    acc + planeConst(plane)
+  private def checkQuery(entry: String, q: Array[Float]): Unit = {
+    require(q != null, s"CompactIndex.$entry: query vector is null")
+    require(q.length == dim || dim == 0 && ids.isEmpty,
+      s"CompactIndex.$entry: query has ${q.length} dims, the index has $dim")
   }
 
-  private def isAbove(plane: Int, q: Array[Float]): Boolean =
-    signedMargin(plane, q) >= 0.0
-
-  private def treeCandidates(
-      q: Array[Float], n: Int, node: Int,
-      out: scala.collection.mutable.HashSet[Int]): Int = {
-    if (left(node) < 0) {
-      val take = math.min(n, leafLen(node))
-      val off = leafOff(node)
-      var i = 0
-      while (i < take) { out += leafRows(off + i); i += 1 }
-      take
-    } else {
-      val above = isAbove(planeIdx(node), q)
-      val main = if (above) right(node) else left(node)
-      val backup = if (above) left(node) else right(node)
-      val k = treeCandidates(q, n, main, out)
-      if (k < n) k + treeCandidates(q, n - k, backup, out) else k
+  /** Margin n·q + c of the plane at each lane's inner node `node(l)`
+    * into `out(l)`: four plane rows per pass over `q`, each summed in
+    * index order in double, then + c — the one margin arithmetic of
+    * every walk (margin ≥ 0 ⇒ above: ties go above). Lanes at −1 are
+    * idle: they repeat a busy lane's plane and their margin is unused.
+    * At least one lane must be busy. */
+  private def margins(node: Array[Int], q: Array[Float], out: Array[Double]): Unit = {
+    var busy = 0
+    while (node(busy) < 0) busy += 1
+    val p0 = planeIdx(if (node(0) >= 0) node(0) else node(busy))
+    val p1 = planeIdx(if (node(1) >= 0) node(1) else node(busy))
+    val p2 = planeIdx(if (node(2) >= 0) node(2) else node(busy))
+    val p3 = planeIdx(if (node(3) >= 0) node(3) else node(busy))
+    val coef = planeCoef
+    val b0 = p0 * dim; val b1 = p1 * dim; val b2 = p2 * dim; val b3 = p3 * dim
+    var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
+    var i = 0
+    while (i < dim) {
+      val x = q(i).toDouble
+      a0 += coef(b0 + i).toDouble * x
+      a1 += coef(b1 + i).toDouble * x
+      a2 += coef(b2 + i).toDouble * x
+      a3 += coef(b3 + i).toDouble * x
+      i += 1
     }
+    out(0) = a0 + planeConst(p0)
+    out(1) = a1 + planeConst(p1)
+    out(2) = a2 + planeConst(p2)
+    out(3) = a3 + planeConst(p3)
+  }
+
+  /** Squared euclidean distance of stored rows r0, r1 to `q` into
+    * `out(0..1)`: two rows per pass over `q`, each summed in index order
+    * in double. Two, not four: under C2 (JDK 17, x86-64) a four-row
+    * pass measured about 2.5× slower per row than this two-row one, and
+    * the one-row loop 1.5× slower. */
+  private def distances(r0: Int, r1: Int, q: Array[Float], out: Array[Double]): Unit = {
+    val v = vecs
+    val b0 = r0 * dim; val b1 = r1 * dim
+    var a0 = 0.0; var a1 = 0.0
+    var i = 0
+    while (i < dim) {
+      val x = q(i).toDouble
+      val d0 = v(b0 + i).toDouble - x
+      val d1 = v(b1 + i).toDouble - x
+      a0 += d0 * d0; a1 += d1 * d1
+      i += 1
+    }
+    out(0) = a0; out(1) = a1
+  }
+
+  /** Exact re-rank of `rows(0 until n)`: the `topK` smallest by (dist,
+    * id), ascending, NaN last; with `radius`, only rows with
+    * dist ≤ `maxDist` count. Remaps to external ids. */
+  private def rank(q: Array[Float], rows: Array[Int], n: Int, topK: Int,
+      radius: Boolean, maxDist: Double): Array[(Long, Double)] = {
+    val best = new TopK(math.max(0, math.min(topK, n)))
+    if (best.cap > 0) {
+      val d = new Array[Double](2)
+      var j = 0
+      while (j < n) {
+        // an odd last row is scored twice
+        distances(rows(j), rows(math.min(j + 1, n - 1)), q, d)
+        if (!radius || d(0) <= maxDist) best.offer(d(0), ids(rows(j)))
+        if (j + 1 < n && (!radius || d(1) <= maxDist)) best.offer(d(1), ids(rows(j + 1)))
+        j += 2
+      }
+    }
+    best.result
   }
 
   /** Top-k: union candidates over trees, exact squared-euclidean
-    * re-rank ascending, id tiebreak, NaN last. */
+    * re-rank ascending, id tiebreak, NaN last.
+    *
+    * Each tree is the reference's first-n walk with a budget of `topK`
+    * rows: at a leaf take its first min(budget, leafLen) rows; at an
+    * inner node visit the query's side first, then — while budget is
+    * left — the other side (shortfall spill), as an explicit stack. */
   def search(query: Array[Float], topK: Int): Array[(Long, Double)] = {
-    val cand = new scala.collection.mutable.HashSet[Int]
-    var t = 0
-    while (t < roots.length) { treeCandidates(query, topK, roots(t), cand); t += 1 }
-    val scored = cand.iterator.map { pos =>
-      var acc = 0.0
-      val base = pos * dim
-      var i = 0
-      while (i < dim) {
-        val d = vecs(base + i).toDouble - query(i).toDouble
-        acc += d * d
-        i += 1
+    checkQuery("search", query)
+    val cand = new RowSet(math.min(roots.length.toLong * math.max(topK, 0), ids.length.toLong).toInt)
+    if (topK > 0) {
+      val node = Array.fill(Lanes)(-1)  // inner node awaiting its side; -1 idle
+      val rem = new Array[Int](Lanes)     // rows the lane's tree may still take
+      val stack = Array.fill(Lanes)(new Array[Int](64)) // the other sides still to visit
+      val sp = new Array[Int](Lanes)
+      val m = new Array[Double](Lanes)
+      var next = 0                        // next tree to hand to a lane
+      var busy = Lanes
+      while (busy > 0) {
+        busy = 0
+        var l = 0
+        while (l < Lanes) {
+          // take leaves and pop the stack until an inner node; a lane
+          // whose tree is done (out of budget or nodes) starts the next
+          var n = node(l)
+          while (n >= 0 && left(n) < 0 || n < 0 && next < roots.length) {
+            if (n >= 0) {
+              val take = math.min(rem(l), leafLen(n))
+              val off = leafOff(n)
+              var i = 0
+              while (i < take) { cand.add(leafRows(off + i)); i += 1 }
+              rem(l) -= take
+            }
+            n =
+              if (rem(l) > 0 && sp(l) > 0) { sp(l) -= 1; stack(l)(sp(l)) }
+              else if (next < roots.length) { rem(l) = topK; sp(l) = 0; next += 1; roots(next - 1) }
+              else -1
+          }
+          node(l) = n
+          if (n >= 0) busy += 1
+          l += 1
+        }
+        if (busy > 0) {
+          margins(node, query, m)
+          l = 0
+          while (l < Lanes) {
+            val n = node(l)
+            if (n >= 0) {
+              val above = m(l) >= 0.0
+              if (sp(l) == stack(l).length) stack(l) = java.util.Arrays.copyOf(stack(l), 2 * sp(l))
+              stack(l)(sp(l)) = if (above) left(n) else right(n)
+              sp(l) += 1
+              node(l) = if (above) right(n) else left(n)
+            }
+            l += 1
+          }
+        }
       }
-      (ids(pos), acc)
-    }.toArray
-    java.util.Arrays.sort(scored, (a: (Long, Double), b: (Long, Double)) => {
-      val c = java.lang.Double.compare(a._2, b._2)
-      if (c != 0) c else java.lang.Long.compare(a._1, b._1)
-    })
-    scored.take(topK)
+    }
+    rank(query, cand.rows, cand.size, topK, radius = false, 0.0)
   }
 
   /** EXACT top-k by brute scan over every stored row — the SQL face's
@@ -484,25 +582,54 @@ final class CompactIndex(
     * scoring arithmetic and (dist, id, NaN-last) total order as
     * [[search]], so ANN-vs-exact differences are traversal-only. */
   def searchExact(query: Array[Float], topK: Int): Array[(Long, Double)] = {
-    val scored = new Array[(Long, Double)](ids.length)
-    var pos = 0
-    while (pos < ids.length) {
-      var acc = 0.0
-      val base = pos * dim
-      var i = 0
-      while (i < dim) {
-        val d = vecs(base + i).toDouble - query(i).toDouble
-        acc += d * d
-        i += 1
+    checkQuery("searchExact", query)
+    rank(query, Array.range(0, ids.length), ids.length, topK, radius = false, 0.0)
+  }
+
+  /** Single-path descent of every tree, four trees in lockstep: tree t's
+    * leaf node for `q` into `leaf(t)` and its breadcrumb into `path(t)`
+    * (a 1 sentinel, then one bit per level, 1 = above); either may be
+    * null. */
+  private def descend(q: Array[Float], leaf: Array[Int], path: Array[Long]): Unit = {
+    val tree = new Array[Int](Lanes)
+    val node = Array.fill(Lanes)(-1)  // inner node awaiting its side; -1 idle
+    val bits = new Array[Long](Lanes)
+    val m = new Array[Double](Lanes)
+    var next = 0
+    var busy = Lanes
+    while (busy > 0) {
+      busy = 0
+      var l = 0
+      while (l < Lanes) {
+        // a lane at a leaf records it and starts the next tree
+        var n = node(l)
+        while (n >= 0 && left(n) < 0 || n < 0 && next < roots.length) {
+          if (n >= 0) {
+            if (leaf != null) leaf(tree(l)) = n
+            if (path != null) path(tree(l)) = bits(l)
+          }
+          n =
+            if (next < roots.length) { tree(l) = next; bits(l) = 1L; next += 1; roots(next - 1) }
+            else -1
+        }
+        node(l) = n
+        if (n >= 0) busy += 1
+        l += 1
       }
-      scored(pos) = (ids(pos), acc)
-      pos += 1
+      if (busy > 0) {
+        margins(node, q, m)
+        l = 0
+        while (l < Lanes) {
+          val n = node(l)
+          if (n >= 0) {
+            val above = m(l) >= 0.0
+            node(l) = if (above) right(n) else left(n)
+            bits(l) = 2 * bits(l) + (if (above) 1L else 0L)
+          }
+          l += 1
+        }
+      }
     }
-    java.util.Arrays.sort(scored, (a: (Long, Double), b: (Long, Double)) => {
-      val c = java.lang.Double.compare(a._2, b._2)
-      if (c != 0) c else java.lang.Long.compare(a._1, b._1)
-    })
-    scored.take(topK)
   }
 
   /** All (id, dist ≤ maxDist) among the query's leaf candidates —
@@ -512,56 +639,28 @@ final class CompactIndex(
     * Approximate like every forest path: a row outside the query's
     * leaf in every tree is missed. Ascending (dist, id). */
   def searchRadius(query: Array[Float], maxDist: Double): Array[(Long, Double)] = {
-    val cand = new scala.collection.mutable.HashSet[Int]
-    var t = 0
-    while (t < roots.length) {
-      var node = roots(t)
-      while (left(node) >= 0)
-        node = if (isAbove(planeIdx(node), query)) right(node) else left(node)
-      val off = leafOff(node)
+    checkQuery("searchRadius", query)
+    val leaf = new Array[Int](roots.length)
+    descend(query, leaf, null)
+    val cand = new RowSet(16 * roots.length)
+    leaf.foreach { n =>
       var i = 0
-      while (i < leafLen(node)) { cand += leafRows(off + i); i += 1 }
-      t += 1
+      while (i < leafLen(n)) { cand.add(leafRows(leafOff(n) + i)); i += 1 }
     }
-    val scored = cand.iterator.map { pos =>
-      var acc = 0.0
-      val base = pos * dim
-      var i = 0
-      while (i < dim) {
-        val d = vecs(base + i).toDouble - query(i).toDouble
-        acc += d * d
-        i += 1
-      }
-      (ids(pos), acc)
-    }.filter(_._2 <= maxDist).toArray
-    java.util.Arrays.sort(scored, (a: (Long, Double), b: (Long, Double)) => {
-      val c = java.lang.Double.compare(a._2, b._2)
-      if (c != 0) c else java.lang.Long.compare(a._1, b._1)
-    })
-    scored
+    rank(query, cand.rows, cand.size, cand.size, radius = true, maxDist)
   }
 
   /** (treeId, breadcrumb-path leaf id) per tree for one vector. */
   def leafPaths(q: Array[Float]): Array[(Int, Long)] = {
-    val out = new Array[(Int, Long)](roots.length)
-    var t = 0
-    while (t < roots.length) {
-      var node = roots(t)
-      var path = 1L
-      while (left(node) >= 0) {
-        val above = isAbove(planeIdx(node), q)
-        node = if (above) right(node) else left(node)
-        path = 2 * path + (if (above) 1 else 0)
-      }
-      out(t) = (t, path)
-      t += 1
-    }
-    out
+    checkQuery("leafPaths", q)
+    val path = new Array[Long](roots.length)
+    descend(q, null, path)
+    Array.tabulate(roots.length)(t => (t, path(t)))
   }
 
   /** ‖n‖ per plane — lazily computed once per executor-side index,
-    * normalizes [[isAbove]]'s accumulator into a true point-to-plane
-    * distance for the spill criterion. */
+    * normalizes [[margins]] into a true point-to-plane distance for the
+    * spill criterion. */
   @transient private lazy val planeNorms: Array[Double] = {
     val n = planeConst.length
     val out = new Array[Double](n)
@@ -596,7 +695,10 @@ final class CompactIndex(
     * not a theorem. */
   def leafPathsSpill(q: Array[Float], eps: Double, maxLeavesPerTree: Int): Array[(Int, Long)] = {
     require(maxLeavesPerTree >= 1, s"maxLeavesPerTree must be >= 1, got $maxLeavesPerTree")
+    checkQuery("leafPathsSpill", q)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+    val lane = Array.fill(Lanes)(-1) // one busy lane: this walk decides one node at a time
+    val m = new Array[Double](Lanes)
     var t = 0
     while (t < roots.length) {
       var leaves = 0
@@ -608,13 +710,14 @@ final class CompactIndex(
           out += ((t, path))
           leaves += 1
         } else {
-          val p = planeIdx(node)
-          val acc = signedMargin(p, q)
+          lane(0) = node
+          margins(lane, q, m)
+          val acc = m(0)
           val above = acc >= 0.0
           val main = (if (above) right(node) else left(node),
             2 * path + (if (above) 1L else 0L))
           // push backup first so the main child pops (explores) first
-          if (math.abs(acc) < eps * planeNorms(p))
+          if (math.abs(acc) < eps * planeNorms(planeIdx(node)))
             stack = (if (above) left(node) else right(node),
               2 * path + (if (above) 0L else 1L)) :: stack
           stack = main :: stack
@@ -635,7 +738,72 @@ final class CompactIndex(
     Array.emptyLongArray, Array.emptyFloatArray, dim)
 }
 
+/** A query's candidate rows: an open-addressing set of row positions
+  * (slot value row + 1, 0 = empty) that also lists its members in
+  * insertion order in `rows(0 until size)`. Grows as needed. */
+private final class RowSet(expected: Int) {
+  private var slots = new Array[Int](Integer.highestOneBit(math.max(8, expected) * 2 - 1) * 2)
+  var rows = new Array[Int](math.max(8, expected))
+  var size = 0
+
+  def add(r: Int): Unit = {
+    if (2 * (size + 1) > slots.length) grow()
+    if (put(slots, r)) {
+      if (size == rows.length) rows = java.util.Arrays.copyOf(rows, 2 * size)
+      rows(size) = r
+      size += 1
+    }
+  }
+
+  // linear probing; false when `r` is already present
+  private def put(table: Array[Int], r: Int): Boolean = {
+    val mask = table.length - 1
+    val h = r * 0x9E3779B9
+    var s = (h ^ (h >>> 16)) & mask
+    while (table(s) != 0 && table(s) != r + 1) s = (s + 1) & mask
+    val fresh = table(s) == 0
+    table(s) = r + 1
+    fresh
+  }
+
+  private def grow(): Unit = {
+    val bigger = new Array[Int](2 * slots.length)
+    var i = 0
+    while (i < size) { put(bigger, rows(i)); i += 1 }
+    slots = bigger
+  }
+}
+
+/** The `cap` smallest (dist, id) pairs offered, kept sorted ascending by
+  * (java.lang.Double.compare on dist — so NaN last — then id) with one
+  * insertion step per offer. */
+private final class TopK(val cap: Int) {
+  private val dist = new Array[Double](cap)
+  private val id = new Array[Long](cap)
+  private var size = 0
+
+  private def before(d: Double, i: Long, j: Int): Boolean = {
+    val c = java.lang.Double.compare(d, dist(j))
+    c < 0 || c == 0 && i < id(j)
+  }
+
+  def offer(d: Double, i: Long): Unit =
+    if (size < cap || before(d, i, cap - 1)) {
+      var j = if (size < cap) { size += 1; size - 1 } else cap - 1
+      while (j > 0 && before(d, i, j - 1)) {
+        dist(j) = dist(j - 1); id(j) = id(j - 1)
+        j -= 1
+      }
+      dist(j) = d; id(j) = i
+    }
+
+  def result: Array[(Long, Double)] = Array.tabulate(size)(j => (id(j), dist(j)))
+}
+
 object CompactIndex {
+  /** Trees walked at once by the query walks (8 measured slower than 4). */
+  private final val Lanes = 4
+
   /** Joins per-tree buffers, in tree order, into one index over the
     * store (`ids`, row-major `vecs` of nRows × dim), shifting each
     * tree's node, plane and leaf-row offsets past the trees before it. */
@@ -752,6 +920,11 @@ case class FlatNode(
     leftId: Int, rightId: Int, leafRows: Array[Int])
 
 object AnnForestModel {
+  /** A vector column value as the index reads it: null stays null (the
+    * index rejects it by name), and cosine models normalize. */
+  private def queryVector(v: Seq[Float], cosine: Boolean): Array[Float] =
+    if (v == null) null else if (cosine) l2NormalizeJvm(v.toArray) else v.toArray
+
   /** JVM-side one-pass L2 normalization (zero vectors pass through). */
   private[ann] def l2NormalizeJvm(q: Array[Float]): Array[Float] = {
     var n = 0.0

@@ -12,12 +12,19 @@ class AnnForestSpec extends SparkSpec {
   lazy val model = AnnForest(numTrees = 50, maxLeafSize = 5, seed = 42L)
     .fit(emb, "vec_id", "embedding")
 
-  /** SHA-256 over every layout array of `c`, floats as raw bits — pins
-    * the builder's output bit for bit. */
-  private def layoutDigest(c: CompactIndex): String = {
+  /** Hex SHA-256 of what `body` writes. */
+  private def sha256(body: java.io.DataOutputStream => Unit): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     val out = new java.io.DataOutputStream(new java.security.DigestOutputStream(
       java.io.OutputStream.nullOutputStream(), md))
+    body(out)
+    out.flush()
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
+  /** SHA-256 over every layout array of `c`, floats as raw bits — pins
+    * the builder's output bit for bit. */
+  private def layoutDigest(c: CompactIndex): String = sha256 { out =>
     def ints(a: Array[Int]): Unit = { out.writeInt(a.length); a.foreach(out.writeInt) }
     def floats(a: Array[Float]): Unit = {
       out.writeInt(a.length); a.foreach(f => out.writeInt(java.lang.Float.floatToRawIntBits(f)))
@@ -27,8 +34,6 @@ class AnnForestSpec extends SparkSpec {
     ints(c.leafOff); ints(c.leafLen); ints(c.leafRows)
     out.writeInt(c.ids.length); c.ids.foreach(out.writeLong)
     floats(c.vecs); out.writeInt(c.dim)
-    out.flush()
-    md.digest().map(b => f"$b%02x").mkString
   }
 
   test("hyperplane bisector math matches hand computation") {
@@ -407,6 +412,321 @@ class AnnForestSpec extends SparkSpec {
       .fit(emb, "vec_id", "embedding")
     assert(layoutDigest(cos.compact) ===
       "685eb5823ebe41322cbb790e891c1d5f53fd8049386ebf85bd42507b18cb5622")
+  }
+
+  /** 300 queries from the sf0.001 store: every third a stored row as is
+    * (so ties and self-matches occur), the rest a stored row plus seeded
+    * Gaussian noise. */
+  private lazy val pinQueries: Array[Array[Float]] = {
+    val store = emb.select("vec_id", "embedding").as[(Long, Array[Float])]
+      .collect().sortBy(_._1).map(_._2)
+    val rng = new java.util.Random(17L)
+    Array.tabulate(300) { j =>
+      val v = store((j * 7) % store.length)
+      if (j % 3 == 0) v.clone() else v.map(x => (x + 0.05 * rng.nextGaussian()).toFloat)
+    }
+  }
+
+  /** SHA-256 per query family over every result of `m` (ids, raw double
+    * bits, leaf paths) for [[pinQueries]] — pins the search and routing
+    * kernels' output bit for bit. */
+  private def resultsDigests(m: AnnForestModel): Map[String, String] = {
+    def hits(rs: Iterator[Array[(Long, Double)]]) = sha256 { out =>
+      rs.foreach { r =>
+        out.writeInt(r.length)
+        r.foreach { case (id, d) => out.writeLong(id); out.writeLong(java.lang.Double.doubleToRawLongBits(d)) }
+      }
+    }
+    def paths(rs: Iterator[Array[(Int, Long)]]) = sha256 { out =>
+      rs.foreach { r => out.writeInt(r.length); r.foreach { case (t, p) => out.writeInt(t); out.writeLong(p) } }
+    }
+    val c = m.compact
+    val stored = Iterator.range(0, c.ids.length).map(r => c.vecs.slice(r * c.dim, (r + 1) * c.dim))
+    Map(
+      "search@1" -> hits(pinQueries.iterator.map(m.search(_, 1))),
+      "search@10" -> hits(pinQueries.iterator.map(m.search(_, 10))),
+      "search@37" -> hits(pinQueries.iterator.map(m.search(_, 37))),
+      "searchExact@10" -> hits(pinQueries.iterator.map(q => c.searchExact(q, 10))),
+      "searchExact@37" -> hits(pinQueries.iterator.map(q => c.searchExact(q, 37))),
+      "searchRadius" -> hits(pinQueries.iterator.map(m.searchRadius(_, 1.2535))),
+      "leafPaths" -> paths(stored.map(c.leafPaths)),
+      "leafPathsSpill" -> paths(pinQueries.iterator.map(q => c.leafPathsSpill(q, 0.25, 4))))
+  }
+
+  test("search and routing results are pinned bit for bit (euclidean 50-tree, cosine 8-tree)") {
+    val cos = AnnForest(numTrees = 8, maxLeafSize = 5, seed = 5L, metric = "cosine")
+      .fit(emb, "vec_id", "embedding")
+    // recorded from the recursive one-tree-at-a-time walk
+    assert(resultsDigests(model) === Map(
+      "leafPaths" -> "feeb58b1e30a798ef08db6417e6a32b4fa148dd9a94b5a5cdda8e8a606f1e775",
+      "leafPathsSpill" -> "86696d03098ce234fc43ac290e0ee6e884f3bf08d768871035e083e58dc5d246",
+      "search@1" -> "4694bd7529f50785d3e1c057e8daf3ee82404cab36b3b56630880a0873e49c7a",
+      "search@10" -> "0eb07f391e3b52d08a821ae974bd6bad8bd367f2db2512fb3f4791c70c007984",
+      "search@37" -> "1416075f265409b8007f7c96e03b9de0544b507e940d8a54867e367f12a94660",
+      "searchExact@10" -> "ba390c700c82ac359eedcad2e2b9e1dbeb879549973de4f2a9074c558c6d7ff0",
+      "searchExact@37" -> "7090596b0ede6ed8c4062f8d612d7823dd38d0bce16a5c66dc0153d9e24fc890",
+      "searchRadius" -> "d80ddc6ecf0475bbddd1b90d1d4d21129ba93bb6214609e7c2800efac7d570aa"))
+    assert(resultsDigests(cos) === Map(
+      "leafPaths" -> "42b3c1df8f70c56025ea3b8f8fe1851b055fb4222df7aa4900ca704248378937",
+      "leafPathsSpill" -> "58313845fad33f389b7d2893b11642a4a15026707c20d0d2d939874079c153a6",
+      "search@1" -> "93d8a84d5ae5ab7dfe1c6ebd1ff7a7fbcb6a0332b532c5bf5be0e8357218f1d9",
+      "search@10" -> "599b4e2f85be4224e923eef52317e1e59aa31dcd510aa18a18e944c24247aaed",
+      "search@37" -> "d71ce7e4c0f34574497164767dfed1c7306c5b68e02a2bbdd7359df6f961bdc3",
+      "searchExact@10" -> "c281aef82e230134e54a74210d451f611e18925e0497816941b385f36084b965",
+      "searchExact@37" -> "b6fe67ebc98366df248e94190239be0a2ae177fe185a03aeb98aa7578ec9a8f2",
+      "searchRadius" -> "47b0147d47029b999e26db89f2195d8265bf456f997cce7f5e00e6943441aee9"))
+  }
+
+  /** The recursive one-tree-at-a-time walk [[CompactIndex]] ran before
+    * its four-lane kernel, over the index's public arrays: the
+    * differential oracle for every query kernel. */
+  private object ScalarWalk {
+    def margin(c: CompactIndex, p: Int, q: Array[Float]): Double = {
+      var acc = 0.0
+      var i = 0
+      while (i < c.dim) { acc += c.planeCoef(p * c.dim + i).toDouble * q(i); i += 1 }
+      acc + c.planeConst(p)
+    }
+
+    private def candidates(c: CompactIndex, q: Array[Float], n: Int, node: Int,
+        out: scala.collection.mutable.HashSet[Int]): Int =
+      if (c.left(node) < 0) {
+        val take = math.min(n, c.leafLen(node))
+        (0 until take).foreach(i => out += c.leafRows(c.leafOff(node) + i))
+        take
+      } else {
+        val above = margin(c, c.planeIdx(node), q) >= 0.0
+        val main = if (above) c.right(node) else c.left(node)
+        val backup = if (above) c.left(node) else c.right(node)
+        val k = candidates(c, q, n, main, out)
+        if (k < n) k + candidates(c, q, n - k, backup, out) else k
+      }
+
+    private def ranked(c: CompactIndex, q: Array[Float], rows: Iterable[Int]): Array[(Long, Double)] = {
+      val scored = rows.map { r =>
+        (c.ids(r), (0 until c.dim).foldLeft(0.0) { (acc, i) =>
+          val d = c.vecs(r * c.dim + i).toDouble - q(i).toDouble
+          acc + d * d
+        })
+      }.toArray
+      java.util.Arrays.sort(scored, (a: (Long, Double), b: (Long, Double)) => {
+        val o = java.lang.Double.compare(a._2, b._2)
+        if (o != 0) o else java.lang.Long.compare(a._1, b._1)
+      })
+      scored
+    }
+
+    def search(c: CompactIndex, q: Array[Float], k: Int): Array[(Long, Double)] = {
+      val cand = scala.collection.mutable.HashSet.empty[Int]
+      c.roots.foreach(candidates(c, q, k, _, cand))
+      ranked(c, q, cand).take(k)
+    }
+
+    def searchExact(c: CompactIndex, q: Array[Float], k: Int): Array[(Long, Double)] =
+      ranked(c, q, c.ids.indices).take(k)
+
+    private def descend(c: CompactIndex, q: Array[Float], t: Int): (Int, Long) = {
+      var node = c.roots(t)
+      var path = 1L
+      while (c.left(node) >= 0) {
+        val above = margin(c, c.planeIdx(node), q) >= 0.0
+        node = if (above) c.right(node) else c.left(node)
+        path = 2 * path + (if (above) 1 else 0)
+      }
+      (node, path)
+    }
+
+    def leafPaths(c: CompactIndex, q: Array[Float]): Array[(Int, Long)] =
+      c.roots.indices.map(t => (t, descend(c, q, t)._2)).toArray
+
+    def searchRadius(c: CompactIndex, q: Array[Float], maxDist: Double): Array[(Long, Double)] = {
+      val rows = c.roots.indices.flatMap { t =>
+        val leaf = descend(c, q, t)._1
+        (0 until c.leafLen(leaf)).map(i => c.leafRows(c.leafOff(leaf) + i))
+      }.distinct
+      ranked(c, q, rows).filter(_._2 <= maxDist)
+    }
+
+    def leafPathsSpill(c: CompactIndex, q: Array[Float], eps: Double, maxLeaves: Int): Array[(Int, Long)] = {
+      def norm(p: Int) = math.sqrt((0 until c.dim).foldLeft(0.0) { (acc, i) =>
+        acc + c.planeCoef(p * c.dim + i).toDouble * c.planeCoef(p * c.dim + i)
+      })
+      c.roots.indices.flatMap { t =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+        var stack = List((c.roots(t), 1L))
+        while (stack.nonEmpty && out.length < maxLeaves) {
+          val (node, path) = stack.head
+          stack = stack.tail
+          if (c.left(node) < 0) out += ((t, path))
+          else {
+            val acc = margin(c, c.planeIdx(node), q)
+            val above = acc >= 0.0
+            if (math.abs(acc) < eps * norm(c.planeIdx(node)))
+              stack = (if (above) c.left(node) else c.right(node), 2 * path + (if (above) 0L else 1L)) :: stack
+            stack = (if (above) c.right(node) else c.left(node), 2 * path + (if (above) 1L else 0L)) :: stack
+          }
+        }
+        out
+      }.toArray
+    }
+  }
+
+  private val specials = Array(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, -0.0f)
+
+  /** A random forest over `n` rows built straight through [[TreeBuffers]]:
+    * random leaf sizes 1–4, and a mix of planes — random; through a
+    * stored row (a stored-row query ties, and ties go above); all-zero
+    * (every finite query ties); and, at dim ≥ 3, 2^60·x_i − 2^60·x_j +
+    * x_k − 1 with i < j < k, whose margin for an all-ones query is 0
+    * summed in index order and −1 summed backwards. The store repeats
+    * vectors under distinct ids (one of them all ones) and carries NaN,
+    * ±Inf and −0.0 components. */
+  private def randomIndex(rng: java.util.Random, n: Int, dim: Int, trees: Int): CompactIndex = {
+    val vecs = Array.fill(n * dim)(rng.nextGaussian().toFloat)
+    if (n > 0) java.util.Arrays.fill(vecs, 0, dim, 1f)
+    (1 until n).foreach { r =>
+      if (rng.nextInt(5) == 0) System.arraycopy(vecs, rng.nextInt(r) * dim, vecs, r * dim, dim)
+      else if (rng.nextInt(6) == 0) vecs(r * dim + rng.nextInt(dim)) = specials(rng.nextInt(specials.length))
+    }
+    val ids = new scala.util.Random(rng).shuffle((0 until n).map(i => 100L + 3 * i)).toArray
+    val plane = new Array[Float](dim)
+    val bufs = (0 until trees).map { _ =>
+      val tree = new TreeBuffers(dim, new scala.util.Random(rng).shuffle((0 until n).toVector).toArray)
+      def addPlane(): Int = {
+        java.util.Arrays.fill(plane, 0f)
+        var c = 0f
+        rng.nextInt(if (dim >= 3) 4 else 3) match {
+          case 0 =>
+            plane.indices.foreach(i => plane(i) = rng.nextGaussian().toFloat)
+            c = rng.nextGaussian().toFloat
+          case 1 =>
+            val j = rng.nextInt(dim)
+            plane(j) = 1f
+            c = -vecs(rng.nextInt(n) * dim + j)
+          case 2 =>
+            c = if (rng.nextBoolean()) 0f else -0.0f
+          case _ =>
+            val Array(i, j, k) = new scala.util.Random(rng).shuffle((0 until dim).toVector).take(3).sorted.toArray
+            plane(i) = math.pow(2, 60).toFloat; plane(j) = -plane(i); plane(k) = 1f
+            c = -1f
+        }
+        tree.addPlane(plane, c)
+      }
+      def grow(lo: Int, hi: Int, depth: Int): Int =
+        if (hi - lo <= 1 + rng.nextInt(4) || depth >= 12) tree.leaf(lo, hi - lo)
+        else {
+          val node = tree.inner(addPlane())
+          val mid = lo + 1 + rng.nextInt(hi - lo - 1)
+          tree.link(node, grow(lo, mid, depth + 1), grow(mid, hi, depth + 1))
+          node
+        }
+      grow(0, n, 0)
+      tree
+    }
+    CompactIndex.concat(bufs, ids, vecs, dim)
+  }
+
+  test("four-lane kernels equal the recursive scalar walk on random forests") {
+    def bits(r: Array[(Long, Double)]) = r.toSeq.map { case (i, d) => (i, java.lang.Double.doubleToRawLongBits(d)) }
+    val rng = new java.util.Random(2024L)
+    val empty = CompactIndex.concat(Seq.fill(3)(new TreeBuffers(0, Array.emptyIntArray)).map { t =>
+      t.leaf(0, 0); t
+    }, Array.emptyLongArray, Array.emptyFloatArray, dim = 0)
+    val cases = (empty, Seq(Array(0f, 0f), Array.emptyFloatArray)) +: (for {
+      dim <- Seq(1, 3, 7, 64)
+      trees <- Seq(1, 3, 5, 50)
+    } yield {
+      val n = 20 + rng.nextInt(40)
+      val c = randomIndex(rng, n, dim, trees)
+      val stored = (0 until n).map(r => c.vecs.slice(r * dim, (r + 1) * dim))
+      val odd = Seq.fill(12) {
+        val q = Array.fill(dim)(rng.nextGaussian().toFloat)
+        q(rng.nextInt(dim)) = specials(rng.nextInt(specials.length))
+        q
+      }
+      (c, stored ++ odd ++ Seq(Array.fill(dim)(1f), Array.fill(dim)(0f), Array.fill(dim)(-0.0f),
+        Array.fill(dim)(rng.nextGaussian().toFloat)))
+    })
+    var checked = 0
+    cases.foreach { case (c, queries) =>
+      val ks = Seq(-1, 0, 1, 5, 10, c.ids.length + 3)
+      queries.foreach { q =>
+        def where = s"dim ${c.dim}, ${c.roots.length} trees, q ${q.mkString("[", ",", "]")}"
+        ks.foreach { k =>
+          assert(bits(c.search(q, k)) === bits(ScalarWalk.search(c, q, k)), s"search k=$k, $where")
+          assert(bits(c.searchExact(q, k)) === bits(ScalarWalk.searchExact(c, q, k)), s"searchExact k=$k, $where")
+        }
+        Seq(0.0, 2.0, Double.PositiveInfinity).foreach { r =>
+          assert(bits(c.searchRadius(q, r)) === bits(ScalarWalk.searchRadius(c, q, r)), s"searchRadius $r, $where")
+        }
+        assert(c.leafPaths(q).toSeq === ScalarWalk.leafPaths(c, q).toSeq, s"leafPaths, $where")
+        for (eps <- Seq(0.0, 0.3, Double.PositiveInfinity); cap <- Seq(1, 3))
+          assert(c.leafPathsSpill(q, eps, cap).toSeq === ScalarWalk.leafPathsSpill(c, q, eps, cap).toSeq,
+            s"leafPathsSpill $eps/$cap, $where")
+        checked += 1
+      }
+    }
+    info(s"$checked queries over ${cases.length} indexes")
+  }
+
+  /** Messages down an exception's cause chain (Spark wraps task failures). */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  private lazy val smallIndex = AnnForest(numTrees = 3, maxLeafSize = 5, seed = 1L)
+    .fit(emb, "vec_id", "embedding").compact
+
+  Seq[(String, (CompactIndex, Array[Float]) => Any)](
+    "search" -> (_.search(_, 5)),
+    "searchExact" -> (_.searchExact(_, 5)),
+    "searchRadius" -> (_.searchRadius(_, 1.0)),
+    "leafPaths" -> (_.leafPaths(_)),
+    "leafPathsSpill" -> (_.leafPathsSpill(_, 0.25, 4))
+  ).foreach { case (entry, call) =>
+    test(s"CompactIndex.$entry rejects null and wrong-length queries by name") {
+      for (c <- Seq(smallIndex, smallIndex.structureOnly)) {
+        Seq(Array.fill(65)(0f) -> "query has 65 dims, the index has 64",
+            Array.fill(63)(0f) -> "query has 63 dims, the index has 64",
+            (null: Array[Float]) -> "query vector is null").foreach { case (q, why) =>
+          val e = intercept[IllegalArgumentException](call(c, q))
+          assert(e.getMessage.contains(s"CompactIndex.$entry: $why"))
+        }
+      }
+    }
+  }
+
+  test("searchBatch rejects null and wrong-length query vectors by name") {
+    val m = new AnnForestModel(smallIndex)
+    Seq(Seq(1L -> Array.fill(3)(0f)) -> "query has 3 dims, the index has 64",
+        Seq(1L -> (null: Array[Float])) -> "query vector is null").foreach { case (rows, why) =>
+      val e = intercept[Exception](m.searchBatch(rows.toDF("query_id", "qvec"), 5).collect())
+      assert(messages(e).contains(s"CompactIndex.search: $why"), messages(e))
+    }
+  }
+
+  test("assignLeaves rejects null and wrong-length vectors by name") {
+    val m = new AnnForestModel(smallIndex)
+    for (eps <- Seq(0.0, 0.25)) {
+      val entry = if (eps > 0) "leafPathsSpill" else "leafPaths"
+      Seq(Seq(1L -> Array.fill(65)(0f)) -> "query has 65 dims, the index has 64",
+          Seq(1L -> (null: Array[Float])) -> "query vector is null").foreach { case (rows, why) =>
+        val e = intercept[Exception](
+          m.assignLeaves(rows.toDF("vec_id", "embedding"), spillEps = eps).collect())
+        assert(messages(e).contains(s"CompactIndex.$entry: $why"), messages(e))
+      }
+    }
+  }
+
+  test("SQL knn faces reject null and wrong-length query vectors by name") {
+    new AnnForestModel(smallIndex).registerSql(spark, "t_dim_knn", "t_dim_knn_exact")
+    Seq("t_dim_knn" -> "search", "t_dim_knn_exact" -> "searchExact").foreach { case (fn, entry) =>
+      Seq(Seq(1L -> Array.fill(2)(0f)) -> "query has 2 dims, the index has 64",
+          Seq(1L -> (null: Array[Float])) -> "query vector is null").foreach { case (rows, why) =>
+        rows.toDF("query_id", "qvec").createOrReplaceTempView("t_dim_q")
+        val e = intercept[Exception](spark.sql(s"SELECT $fn(qvec, 5) FROM t_dim_q").collect())
+        assert(messages(e).contains(s"CompactIndex.$entry: $why"), messages(e))
+      }
+    }
   }
 
   test("empty and single-row frames: search, searchBatch and save/load") {
