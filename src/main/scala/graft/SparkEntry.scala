@@ -692,7 +692,7 @@ object SparkEntry {
     // recall (eps 0.25 recovers every in-radius pair here), zone maps
     // cancel the unreachable probes it added: 5% of probes pruned at
     // this wide radius, 35% at maxDist=0.1 on the same fixture
-    // (tools/ProbeZoneMap; random vectors are the worst case — real
+    // (ProbeZoneMap; random vectors are the worst case — real
     // corpora cluster, and near-dup radii are tight).
     "q89_radius_zonemap" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
@@ -756,7 +756,7 @@ object SparkEntry {
     // worst case (near-uniform random vectors — no cluster structure,
     // so neighbors scatter across every cell): nprobe = nlist and a
     // wide shortlist are what exactness costs here, verified diff=0 vs
-    // exact at sf0.01 AND sf0.1 (tools/ProbeQ64; shortlist=100 left 2
+    // exact at sf0.01 AND sf0.1 (ProbeQ64; shortlist=100 left 2
     // stragglers at sf0.1, 200 clears both). The cell-join machinery
     // exercised is identical at any nprobe; the recall/nprobe trade on
     // its own is pinned in PqSpec.
@@ -781,7 +781,7 @@ object SparkEntry {
     // floor — IS a deterministic bit for these seeded builds, so each
     // backend emits one (backend, recall_ok) row and the oracle pins the
     // constant truth. Floors sit ~0.05 under the measured sf0.01 values
-    // (tools/ProbeRecall: traversal .960, self_bucketed .806,
+    // (ProbeRecall: traversal .960, self_bucketed .806,
     // distributed .840, ivf .616, mllib_lsh .940, pq_adc .818); a
     // regression dropping any backend below its floor flips its bit and
     // hash-mismatches. The whole gate is ONE lazy plan (a union of
@@ -2693,7 +2693,7 @@ object SparkEntry {
     // near-dup operators): deterministic property bits hash-checked
     // against constant truth. simhash_recall: the Hamming≤8 pair set
     // recovers ≥90% of the exact-Jaccard≥0.5 pairs (measured 24/25 at
-    // sf0.01, tools/ProbeCuration). semdedup_no_dup_survivors: no
+    // sf0.01, ProbeCuration). semdedup_no_dup_survivors: no
     // same-cell pair with cos ≥ τ has BOTH endpoints surviving — the
     // defining invariant of SemDeDup's one-representative-per-component
     // contract, checked against the pair set itself.
@@ -4664,8 +4664,8 @@ object SparkEntry {
     // q213: the HIERARCHICAL NSW backend (round-10 verdict #4) under
     // the constant-truth gate — the HNSW layer stack (deterministic
     // hash-assigned levels, greedy layer descent, diversity-heuristic
-    // neighbor selection) on the q199 geometry. ProbeNswBig is the
-    // scale ledger: on a 50k-node CLUSTERED shard flat NSW strands at
+    // neighbor selection) on the q199 geometry. ProbeNswBig measured
+    // it at scale: on a 50k-node CLUSTERED shard flat NSW strands at
     // recall 0.015 while the hierarchy serves 0.961 at ef=32 with
     // FEWER distance evaluations (51 vs 78 visited/query). Gate bits:
     // recall/MRR floors vs exact (q199's pattern), hierarchical ≡
@@ -6598,7 +6598,7 @@ object SparkEntry {
     * BM25/drift/ANN likewise pay two builds to exercise one
     * model-sized merge or summaries-sized join), so benching them
     * would triple this group while measuring the same build class
-    * q259 already tracks; ProbeFederation carries the measured
+    * q259 already tracks; ProbeFederation measured the
     * merge-vs-refit separation instead. */
   val benchLifecycleQueries: Seq[String] = Seq(
     "q255_store_maintenance", "q257_serve_max_stale",

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * same blowup the join formulation has — and m is bounded by the fit
   * leaf cap plus exact-duplicate multiplicity.
   *
-  * Round-5 profile (sf0.1, local[32], warm, tools/ProfileQ35): this
+  * Round-5 profile (sf0.1, local[32], warm, ProfileQ35): this
   * path runs 0.80 s (0.97 s with the bench's orderBy), vs 1.04-1.20 s
   * for the two-sided join formulation — the round-4 bench's 3.08 s
   * reading was host contention, not plan cost (same code, while the

@@ -217,7 +217,9 @@ class DistributedAnnModel(
     * BOTH children of any plane within eps (point-to-plane distance) of
     * the vector — main-path-first, ≤ `maxLeavesPerTree` leaves per tree
     * (see [[CompactIndex.leafPathsSpill]]; this is the query-side
-    * recall knob that leaves the standing corpus buckets untouched). */
+    * recall knob that leaves the standing corpus buckets untouched).
+    * A null vector or one whose length differs from the planes' fails
+    * the routing task by name. */
   def assignLeaves(queries: DataFrame, idCol: String = "query_id",
       vecCol: String = "qvec",
       spillEps: Double = 0.0, maxLeavesPerTree: Int = 4): DataFrame = {
@@ -264,9 +266,20 @@ class DistributedAnnModel(
         }
       }
     }
+    // The vector check is a column expression, not part of the UDF: a
+    // radius join's dist filter makes Catalyst infer isnotnull(__qv)
+    // and push it below the routing, where it would silently drop a
+    // null vector. Every plane has the corpus's length; with no planes
+    // each tree is one root leaf and any vector routes there.
+    val v = col(vecCol).cast(ArrayType(FloatType))
+    val dim = planes.headOption.fold(-1)(_._2.coefficients.length)
+    val checked = when(v.isNull, raise_error(lit("DistributedAnnModel routing: vector is null")))
+      .when(lit(dim >= 0) && size(v) =!= dim,
+        raise_error(concat(lit("DistributedAnnModel routing: vector has "),
+          size(v).cast(StringType), lit(s" dims, the planes have $dim"))))
+      .otherwise(v)
     queries
-      .select(col(idCol).cast(LongType).as("query_id"),
-        col(vecCol).cast(ArrayType(FloatType)).as("__qv"))
+      .select(col(idCol).cast(LongType).as("query_id"), checked.as("__qv"))
       // explode_outer as defense against InferFiltersFromGenerate: with
       // the UDF feeding the Generate directly no filter is inferred
       // today (verified in the optimized plan), but materializing the

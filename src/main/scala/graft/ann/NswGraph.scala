@@ -198,18 +198,11 @@ object NswGraph {
       }
     }
     // reset the scratch bitmap for the next query (O(|touched|), not O(n))
-    visitedCount.add(touched.length)
     var i = 0
     while (i < touched.length) { visited(touched(i)) = false; i += 1 }
     touched.clear()
     res
   }
-
-  /** Probe instrumentation: nodes visited (= distance evaluations)
-    * across all beams in this JVM — meaningful in local mode only
-    * (ProbeNsw reads it to compare flat vs multi-entry routing work);
-    * never consulted by any serving path. */
-  private[graft] val visitedCount = new java.util.concurrent.atomic.LongAdder()
 
   /** Deterministic spread of `e` search entries over a shard of `n`
     * id-ordered nodes: node 0 (the build's insertion root, always the

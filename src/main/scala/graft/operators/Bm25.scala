@@ -473,7 +473,7 @@ object Bm25 {
     // batch's counts added — the standing postings/doclens tables are
     // never rescanned, so per-append cost stays flat as the index grows
     // (PlanSpec pins the no-postings-scan shape; ProbeBm25Append
-    // measures the flatness). Delta-then-merge equals recount exactly:
+    // measured the flatness). Delta-then-merge equals recount exactly:
     // df is additive over disjoint doc sets (the id-overlap require
     // above guarantees disjointness), and (n_docs, sum_dl) are plain
     // integer sums. localCheckpoint severs lineage so each table can

@@ -88,7 +88,7 @@ object Dsir {
     // the scoring inner join pushes isnotnull(ng) below the (id, ng)
     // exchange while the n_r branch (feeding a full-outer) doesn't,
     // and the mismatched subtrees defeat AQE exchange reuse — the raw
-    // corpus would be exploded twice after all (ProbeDsirScan measures
+    // corpus would be exploded twice after all (ProbeDsirScan measured
     // exactly this)
     val docNg = ngrams(raw, idCol, textCol).filter(col("ng").isNotNull)
       .groupBy(col(idCol), col("ng")).agg(count(lit(1)).as("c"))
@@ -112,7 +112,7 @@ object Dsir {
     * join, so the shuffles carry 8-byte keys instead of strings (the
     * q30 lesson — 64-bit shingle keys measured ~9× over the string
     * form at sf0.1, the same width effect applies to the (doc, ngram)
-    * grain here; ProbeR12Stress quantifies this pipeline). A 64-bit
+    * grain here; ProbeR12Stress quantified this pipeline). A 64-bit
     * collision merges two n-grams' statistics — probability
     * ~vocab²·2⁻⁶⁴, and the fixture has none, so the spec pins this
     * EQUAL to the string form there (which is what certifies the

@@ -155,7 +155,7 @@ object NbStore {
     * counts table is Hive-partitioned on pmod(xxhash64(token), P), so
     * every later merge rewrites only the delta-touched partitions
     * instead of the whole model — the 100 TB-vocabulary lever
-    * (CountStore scaladoc; ProbeR15X measures both layouts, including
+    * (CountStore scaladoc; ProbeR15X measured both layouts, including
     * the honest Zipf caveat). The class table stays plain (it is
     * class-count-sized). Layout choice is recorded in
     * `<name>_layout`; merges auto-detect it. */

@@ -271,7 +271,7 @@ object LmStore {
   /** `prefixes > 0` selects the prefix-partitioned layout (v2) for
     * all three n-gram tables (hash keys p1 / prev / token) — merges
     * then rewrite only delta-touched partitions (the NbStore.initStore
-    * clause; ProbeR15X measures it). Recorded in `<name>_layout`. */
+    * clause; ProbeR15X measured it). Recorded in `<name>_layout`. */
   def initStore(reference: DataFrame, name: String, buckets: Int = 32,
       idCol: String = "doc_id", textCol: String = "text",
       prefixes: Int = 0): Unit = {

@@ -102,7 +102,7 @@ object Sinks {
     * hashing scatters ids, so a delta of k ids touches min(k, nShards)
     * shards — the win holds when k ≪ nShards (takedown/edit waves
     * against a 10⁴-10⁵-shard production layout; ProbeShardRefresh
-    * measures both regimes), while a corpus-sized delta degrades to
+    * measured both regimes), while a corpus-sized delta degrades to
     * the full rewrite it semantically is. The merged frame is
     * checkpoint-settled before the write (overwriting a path that is
     * also being read is the classic self-read failure); its size is

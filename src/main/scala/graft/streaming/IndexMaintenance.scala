@@ -270,7 +270,7 @@ object IndexMaintenance {
     * pruning is static, visible as PartitionFilters), then broadcast
     * semi-join the batch ids over the surviving files. No log-sized
     * shuffle, and the files READ are bounded by the batch's prefixes
-    * however large the log grows (ProbeFplogPrune measures this).
+    * however large the log grows (measured by ProbeFplogPrune).
     * Checkpoint-settled. */
   private def priorFingerprints(spark: SparkSession, name: String,
       b: DataFrame, idCol: String): DataFrame =

@@ -26,7 +26,7 @@ import graft.ann.{DistributedAnnForest, DistributedAnnModel}
   * Recall contract: spill eps must recover every in-radius pair for the
   * admission set to equal the exact semantics — eps 0.25 / 8 leaves
   * reproduces it exactly on the fixture across frozen-plane appends
-  * (tools/ProbeVecIngest: falseAdmit=0, falseReject=0); the gate (q93)
+  * (measured by ProbeVecIngest: falseAdmit=0, falseReject=0); the gate (q93)
   * re-proves it every round against the brute-force oracle.
   */
 object VectorIngest {

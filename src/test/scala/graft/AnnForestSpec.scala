@@ -253,6 +253,27 @@ class AnnForestSpec extends SparkSpec {
     assert(res === Set(0L, 1L))
   }
 
+  test("an unknown metric is rejected at construction") {
+    val e = intercept[IllegalArgumentException](AnnForest(metric = "manhattan"))
+    assert(e.getMessage.contains("metric must be euclidean|cosine, got manhattan"))
+  }
+
+  test("cosine metric: a stored zero vector and a zero query fit and search") {
+    val df = Seq((0L, Array(0f, 0f)), (1L, Array(1f, 0f)), (2L, Array(0f, 1f)),
+      (3L, Array(1f, 1f)), (4L, Array(2f, 0f))).toDF("vec_id", "embedding")
+    val m = AnnForest(numTrees = 4, maxLeafSize = 2, metric = "cosine")
+      .fit(df, "vec_id", "embedding")
+    assert(m.ids.toSet === Set(0L, 1L, 2L, 3L, 4L))
+    // both queries are already unit or zero, so normalization leaves
+    // them as they are and the store's exact scan is the oracle
+    for (q <- Seq(Array(1f, 0f), Array(0f, 0f))) {
+      val res = m.search(q, 3)
+      assert(res.nonEmpty, s"no answer for ${q.mkString("(", ",", ")")}")
+      val exact = m.compact.searchExact(q, m.ids.length).toMap
+      res.foreach { case (id, d) => assert(d === exact(id), s"id $id") }
+    }
+  }
+
   test("cosine metric: direct assignLeaves routes raw and pre-normalized vectors identically") {
     val cosModel = AnnForest(numTrees = 8, maxLeafSize = 5, seed = 5L, metric = "cosine")
       .fit(emb, "vec_id", "embedding")
@@ -670,9 +691,6 @@ class AnnForestSpec extends SparkSpec {
   }
 
   /** Messages down an exception's cause chain (Spark wraps task failures). */
-  private def messages(t: Throwable): String =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
-
   private lazy val smallIndex = AnnForest(numTrees = 3, maxLeafSize = 5, seed = 1L)
     .fit(emb, "vec_id", "embedding").compact
 

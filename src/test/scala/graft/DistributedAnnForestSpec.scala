@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ann._
 import graft.operators.KnnExact
@@ -481,5 +482,42 @@ class DistributedAnnForestSpec extends SparkSpec {
     }
     fs.delete(marker, false)
     assert(DistributedAnnModel.load(dir, spark).corpusBuckets.count() > 0)
+  }
+
+  test("an unknown metric is rejected at construction") {
+    val e = intercept[IllegalArgumentException](DistributedAnnForest(metric = "manhattan"))
+    assert(e.getMessage.contains("metric must be euclidean|cosine, got manhattan"))
+  }
+
+  private lazy val small = DistributedAnnForest(numTrees = 4, maxLeafSize = 5,
+    maxDepth = 12, seed = 42L).fit(emb, "vec_id", "embedding")
+
+  /** Each routing entry point, run to completion on a (vec_id, embedding) frame. */
+  private val routingEntries: Seq[(String, DataFrame => Unit)] = Seq(
+    "knnJoin" -> (df => small.knnJoin(df, topK = 3, "vec_id", "embedding").collect()),
+    "radiusJoin" -> (df => small.radiusJoin(df, maxDist = 1.0, "vec_id", "embedding").collect()),
+    "append" -> (df => small.append(df).corpusBuckets.collect()),
+    "routeForStore" -> (df => small.routeForStore(df).collect()))
+
+  for ((entry, run) <- routingEntries) {
+    test(s"$entry rejects null and wrong-length vectors by name") {
+      val dim = small.planes.head._2.coefficients.length
+      Seq(Array.fill(dim + 1)(0f) -> s"vector has ${dim + 1} dims, the planes have $dim",
+          Array.fill(dim - 1)(0f) -> s"vector has ${dim - 1} dims, the planes have $dim",
+          (null: Array[Float]) -> "vector is null").foreach { case (v, why) =>
+        val e = intercept[Exception](run(Seq(1L -> v).toDF("vec_id", "embedding")))
+        assert(messages(e).contains(s"DistributedAnnModel routing: $why"), messages(e))
+      }
+    }
+  }
+
+  test("a model with no planes routes any vector to each tree's root leaf") {
+    val m = DistributedAnnForest(numTrees = 3, maxLeafSize = 5, seed = 1L)
+      .fit(Seq(1L -> Array(1f, 2f), 2L -> Array(3f, 4f)).toDF("vec_id", "embedding"))
+    assert(m.planes.isEmpty)
+    val routed = m.assignLeaves(
+      Seq(7L -> Array(1f), 8L -> Array(1f, 2f, 3f)).toDF("query_id", "qvec"))
+      .select("query_id", "tree_id", "leaf_id").as[(Long, Int, Long)].collect().toSet
+    assert(routed === (for (q <- Set(7L, 8L); t <- 0 until 3) yield (q, t, 1L)))
   }
 }

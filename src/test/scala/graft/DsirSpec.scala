@@ -44,8 +44,8 @@ class DsirSpec extends SparkSpec {
     // subtrees), so pin the runtime effect: after execution the
     // adaptive plan carries ReusedExchange nodes — the n_r branch (and
     // the vocab/totals sharing) physically reused a stage instead of
-    // rescanning. ProbeDsirScan carries the quantitative half: file
-    // input records drop ~2× vs the pre-fix double-explode replica.
+    // rescanning. The ProbeDsirScan probe measured the quantitative half: file
+    // input records dropped ~2× vs the pre-fix double-explode replica.
     val docs = graft.sources.Tables.documents(spark, sf0001)
     val raw = docs.filter($"lang" =!= "es")
     val target = docs.filter($"lang" === "es")

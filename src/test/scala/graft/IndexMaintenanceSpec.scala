@@ -315,8 +315,8 @@ class IndexMaintenanceSpec extends SparkSpec {
     IndexMaintenance.applyUpserts(spark, name, docs, ver = 1L, buckets = 8)
     // a small batch touches few of the 64 fp_prefix partitions; the
     // probe's scan must carry a partition filter on fp_prefix (static
-    // file pruning — ProbeFplogPrune has the quantitative half: probe
-    // records read stay flat while the log grows 10×)
+    // file pruning — the ProbeFplogPrune probe measured the quantitative
+    // half: probe records read stayed flat while the log grew 10×)
     val small = docs.filter($"doc_id" < 5).localCheckpoint()
     val plan = IndexMaintenance.fplogProbe(spark, name, small, "doc_id")
       .queryExecution.executedPlan.toString

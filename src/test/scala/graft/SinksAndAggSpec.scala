@@ -103,6 +103,36 @@ class SinksAndAggSpec extends SparkSpec {
     assert(orig.exceptAll(back).count() === 0)
   }
 
+  test(".vec round-trips a generated file: ids, words and float bits survive, bad rows skip") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vec_gen")
+    // the header misstates the row count (the reference fixture's header
+    // reads `100 300`); floats are written at full precision, including -0.0,
+    // the smallest subnormal and 9-significant-digit values; the word of
+    // the second row is a bare `,`; the last row has the wrong dimension,
+    // so the rows read keep dense ids 0..n-1
+    val rows = Seq(
+      "the" -> Seq("0.1", "-0.0", "1.4E-45", "0.333333343"),
+      "," -> Seq("-2.71828175", "1.17549435E-38", "3.40282347E38", "-0.0"),
+      "zeta" -> Seq("0.123456789", "16777217", "-1.00000001e-7", "42"))
+    val lines = "100 4" +: rows.map { case (w, fs) => (w +: fs).mkString(" ") } :+
+      "short 1.0 2.0 3.0"
+    val in = dir.resolve("in.vec")
+    java.nio.file.Files.write(in, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    def bits(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, Seq[Int])] =
+      df.collect().toSeq.map(r => (r.getLong(0), r.getString(1),
+        r.getSeq[Float](2).map(java.lang.Float.floatToRawIntBits)))
+        .sortBy(_._1)
+    val expected = rows.zipWithIndex.map { case ((w, fs), i) =>
+      (i.toLong, w, fs.map(f => java.lang.Float.floatToRawIntBits(java.lang.Float.parseFloat(f))))
+    }
+    val orig = VecReader.read(spark, in.toString, 4)
+    assert(bits(orig) === expected)
+    val out = dir.resolve("out.vec").toString
+    Sinks.vec(orig, out)
+    assert(scala.io.Source.fromFile(out).getLines().next() === "3 4")
+    assert(bits(VecReader.read(spark, out, 4)) === expected)
+  }
+
   test("morton code matches a bit-twiddling reference implementation") {
     def ref(x: Long, y: Long, bits: Int): Long = {
       var z = 0L
@@ -387,5 +417,33 @@ class SinksAndAggSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"bare insertInto outside Sinks.insertPartitionsDynamic: $offenders — " +
         "route partitioned inserts through the locked helper")
+  }
+
+  test("the only mains are Bench, Verify, Main and the four kept tools") {
+    // A one-off measurement main is compiled by every build and run by
+    // nothing. A new measurement belongs in perfbench/ (end to end and
+    // per layer) or, for Spark job counts, ProbeJobs.
+    import scala.jdk.CollectionConverters._
+    val mainDef = """def\s+main\s*\(\s*\w+\s*:\s*Array\[String\]\s*\)""".r
+    val objectDef = """\bobject\s+(\w+)""".r
+    val mains = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        val pkg = """(?m)^package\s+([\w.]+)""".r.findFirstMatchIn(src).map(_.group(1) + ".")
+        mainDef.findAllMatchIn(src).map { m =>
+          val obj = objectDef.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption
+            .fold(s"<no object in $p>")(_.group(1))
+          pkg.getOrElse("") + obj
+        }
+      }.toSet
+    val expected = Set("graft.Bench", "graft.Verify", "graft.Main",
+      "graft.tools.DumpPlans", "graft.tools.ProbeJobs",
+      "graft.tools.GenBpeAssets", "graft.tools.GenUnigramAssets")
+    assert(mains === expected,
+      s"added mains: ${(mains -- expected).toSeq.sorted.mkString(", ")}; " +
+        s"missing mains: ${(expected -- mains).toSeq.sorted.mkString(", ")} — " +
+        "new measurements belong in perfbench/ or ProbeJobs, not in a new main")
   }
 }
