@@ -4,7 +4,7 @@ import scala.util.Random
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
@@ -14,38 +14,13 @@ import org.apache.spark.sql.Row
   * `h.neighbor_id` / `h.dist` instead of `_1` / `_2`. */
 case class KnnHit(neighbor_id: Long, dist: Double)
 
-/** Hyperplane in implicit form n·x + c = 0 (reference src/hyperplane.rs:3-6).
-  * [[DistributedAnnForest]]'s plane map holds these; the driver-side
-  * forest keeps its planes flat in [[CompactIndex]] with the same
-  * arithmetic. */
-case class HyperPlane(coefficients: Array[Float], constant: Float) extends Serializable {
-  /** Signed unnormalized margin n·x + c. Accumulates in double — the
-    * reference sums f32, a documented precision divergence that only
-    * moves points sitting exactly on a plane. */
-  def signedMargin(v: Array[Float]): Double = {
-    var acc = 0.0
-    var i = 0
-    while (i < coefficients.length) { acc += coefficients(i).toDouble * v(i); i += 1 }
-    acc + constant
-  }
-
-  /** Sidedness: n·x + c ≥ 0 ⇒ "above"; ties go above
-    * (reference src/hyperplane.rs:9-11). */
-  def isAbove(v: Array[Float]): Boolean = signedMargin(v) >= 0.0
-
-  /** ‖n‖ — divides [[signedMargin]] into a true point-to-plane
-    * distance (the spill-routing criterion). Computed once per
-    * executor-side object. */
-  @transient lazy val norm: Double = {
-    var acc = 0.0
-    var i = 0
-    while (i < coefficients.length) {
-      acc += coefficients(i).toDouble * coefficients(i).toDouble
-      i += 1
-    }
-    math.sqrt(acc)
-  }
-}
+/** Hyperplane in implicit form n·x + c = 0 (reference src/hyperplane.rs:3-6):
+  * the value type of [[DistributedAnnModel.planes]] and of its saved
+  * `planes` table. Neither forest does arithmetic on it: both bisect
+  * with [[CompactIndex.bisector]] and test sides with [[CompactIndex]]'s
+  * walks (n·x + c ≥ 0 ⇒ above), the distributed forest through
+  * [[CompactIndex.fromPlanes]]. */
+case class HyperPlane(coefficients: Array[Float], constant: Float)
 
 /** The fitted index (reference ANNIndex, src/lib.rs:15-19): a forest of
   * random-bisector trees + the dedup'd store, held once, as the
@@ -196,22 +171,10 @@ class AnnForestModel(
     */
   def assignLeaves(df: DataFrame, vecCol: String = "embedding",
       spillEps: Double = 0.0, maxLeavesPerTree: Int = 4): DataFrame = {
-    // fail fast on the driver: a 0-leaf budget inside the routing UDF
-    // would silently route every row to nothing
-    require(spillEps <= 0.0 || maxLeavesPerTree >= 1,
-      s"maxLeavesPerTree must be >= 1 when spilling, got $maxLeavesPerTree")
-    val spark = df.sparkSession
-    // Broadcast only topology+planes (compact, store stripped). Under
-    // metric="cosine" the planes were fit on a NORMALIZED store and
-    // n·v + c is not scale-invariant — raw vectors must be normalized
-    // here too or they route to the wrong leaves.
-    val bc = cachedBroadcast(spark, structureOnly = true)
-    val cosineMetric = metric == "cosine"
-    val leafIdUdf = udf { (v: Seq[Float]) =>
-      val q = AnnForestModel.queryVector(v, cosineMetric)
-      if (spillEps > 0.0) bc.value.leafPathsSpill(q, spillEps, maxLeavesPerTree).toSeq
-      else bc.value.leafPaths(q).toSeq
-    }
+    // Broadcast only topology+planes (compact, store stripped).
+    val leafIdUdf = AnnForestModel.routeUdf(
+      cachedBroadcast(df.sparkSession, structureOnly = true),
+      metric == "cosine", spillEps, maxLeavesPerTree)
     // explode_outer, not explode: InferFiltersFromGenerate would add
     // `size(UDF(v)) > 0 AND isnotnull(UDF(v))` below a non-outer Generate,
     // and Scala UDFs get no common-subexpression elimination — the 50-tree
@@ -804,6 +767,48 @@ object CompactIndex {
   /** Trees walked at once by the query walks (8 measured slower than 4). */
   private final val Lanes = 4
 
+  /** Bisector plane of the rows at `a(aOff until aOff + dim)` and
+    * `b(bOff until bOff + dim)`, dim = `n.length` (reference
+    * build_hyperplane, src/lib.rs:22-48): writes n = b − a, in float, into
+    * `n` (kernel arg-order quirk a.subtract_from(b) = b − a,
+    * src/vector.rs:8-12) and returns c = −n·mid, the plane through the
+    * midpoint, summed in double and rounded to float once. */
+  def bisector(a: Array[Float], aOff: Int, b: Array[Float], bOff: Int, n: Array[Float]): Float = {
+    var c = 0.0
+    var i = 0
+    while (i < n.length) {
+      n(i) = b(bOff + i) - a(aOff + i)
+      c += n(i).toDouble * ((a(aOff + i).toDouble + b(bOff + i).toDouble) / 2.0)
+      i += 1
+    }
+    (-c).toFloat
+  }
+
+  /** Structure-only index over a plane map keyed by (tree, breadcrumb
+    * path) — the root is path 1 and node p's children are 2p (below)
+    * and 2p + 1 (above), so each leaf's breadcrumb is its key. A plane
+    * at (t, p) becomes an inner node, no plane an empty leaf. `dim`
+    * comes from the planes; with none, dim is 0 and every tree is one
+    * root leaf, so any vector routes there. */
+  def fromPlanes(numTrees: Int, planes: collection.Map[(Int, Long), HyperPlane]): CompactIndex = {
+    val dim = planes.headOption.fold(0)(_._2.coefficients.length)
+    val trees = (0 until numTrees).map { t =>
+      val tree = new TreeBuffers(dim, Array.emptyIntArray)
+      def grow(p: Long): Int = planes.get((t, p)) match {
+        case None => tree.leaf(0, 0)
+        case Some(pl) =>
+          require(pl.coefficients.length == dim,
+            s"plane ($t, $p) has ${pl.coefficients.length} dims, the others have $dim")
+          val node = tree.inner(tree.addPlane(pl.coefficients, pl.constant))
+          tree.link(node, grow(2 * p), grow(2 * p + 1))
+          node
+      }
+      grow(1L)
+      tree
+    }
+    concat(trees, Array.emptyLongArray, Array.emptyFloatArray, dim)
+  }
+
   /** Joins per-tree buffers, in tree order, into one index over the
     * store (`ids`, row-major `vecs` of nRows × dim), shifting each
     * tree's node, plane and leaf-row offsets past the trees before it. */
@@ -925,6 +930,26 @@ object AnnForestModel {
   private def queryVector(v: Seq[Float], cosine: Boolean): Array[Float] =
     if (v == null) null else if (cosine) l2NormalizeJvm(v.toArray) else v.toArray
 
+  /** The routing UDF body of both forests' `assignLeaves`: a vector's
+    * (tree_id, leaf_id) buckets in the broadcast index — the single
+    * path per tree ([[CompactIndex.leafPaths]]), or with `spillEps` > 0
+    * up to `maxLeavesPerTree` per tree ([[CompactIndex.leafPathsSpill]]).
+    * Under `cosine` the planes were fit on a NORMALIZED store and
+    * n·v + c is not scale-invariant, so raw vectors are normalized here
+    * or they would route to the wrong leaves. */
+  private[ann] def routeUdf(bc: Broadcast[CompactIndex], cosine: Boolean,
+      spillEps: Double, maxLeavesPerTree: Int): UserDefinedFunction = {
+    // fail fast on the driver: a 0-leaf budget inside the routing UDF
+    // would silently route every row to nothing
+    require(spillEps <= 0.0 || maxLeavesPerTree >= 1,
+      s"maxLeavesPerTree must be >= 1 when spilling, got $maxLeavesPerTree")
+    udf { (v: Seq[Float]) =>
+      val q = queryVector(v, cosine)
+      if (spillEps > 0.0) bc.value.leafPathsSpill(q, spillEps, maxLeavesPerTree).toSeq
+      else bc.value.leafPaths(q).toSeq
+    }
+  }
+
   /** JVM-side one-pass L2 normalization (zero vectors pass through). */
   private[ann] def l2NormalizeJvm(q: Array[Float]): Array[Float] = {
     var n = 0.0
@@ -1016,29 +1041,19 @@ case class AnnForest(
     val aboveRows = new Array[Int](n) // partition spill
 
     // Bisector plane of two sampled rows a, b of rows[lo, lo + len)
-    // into `plane`: n = b − a, through the midpoint, c = −n·mid
-    // (reference build_hyperplane, src/lib.rs:22-48; kernel arg-order
-    // quirk a.subtract_from(b) = b − a, src/vector.rs:8-12). Returns c.
+    // into `plane`. Returns c.
     def bisect(lo: Int, len: Int): Float = {
       // sample two distinct positions (reference choose_multiple(2), src/lib.rs:26-28)
       val ai = rng.nextInt(len)
       var bi = rng.nextInt(len)
       var tries = 0
       while (bi == ai && tries < 8) { bi = rng.nextInt(len); tries += 1 }
-      val a = rows(lo + ai) * dim
-      val b = rows(lo + math.max(0, if (bi == ai) (ai + 1) % len else bi)) * dim
-      var c = 0.0
-      var i = 0
-      while (i < dim) {
-        plane(i) = vecs(b + i) - vecs(a + i)
-        c += plane(i).toDouble * ((vecs(a + i).toDouble + vecs(b + i).toDouble) / 2.0)
-        i += 1
-      }
-      (-c).toFloat
+      CompactIndex.bisector(vecs, rows(lo + ai) * dim,
+        vecs, rows(lo + math.max(0, if (bi == ai) (ai + 1) % len else bi)) * dim, plane)
     }
 
     // Stable partition of rows[lo, hi) by `plane`: below first, ties
-    // above (HyperPlane.isAbove's arithmetic). Returns the first above index.
+    // above (CompactIndex.margins' arithmetic). Returns the first above index.
     def partition(lo: Int, hi: Int, c: Float): Int = {
       var below = lo
       var nAbove = 0

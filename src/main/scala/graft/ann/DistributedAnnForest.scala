@@ -26,16 +26,22 @@ import graft.operators.Dedup
   *     counts the group — the only shuffle, carrying 2 vectors per OPEN
   *     NODE, never per row;
   *  3. the driver turns each still-too-big group's sample pair into a
-  *     bisector plane (n = b − a, c = −n·mid — reference
+  *     bisector plane with [[CompactIndex.bisector]], the collected
+  *     build's rule (n = b − a, c = −n·mid — reference
   *     src/lib.rs:22-48) — driver state is planes only, never corpus.
+  *     Level 0's groups are the roots, which hold every row, so their
+  *     aggregate also fails the fit by name on a vector whose length
+  *     differs from the lowest id's.
   *     The per-level stats arrive via toLocalIterator, one shuffle
   *     partition at a time, so the transient peak is the accumulated
   *     plane map (bounded by numTrees·2^maxDepth — the floor for any
   *     driver-routed design) plus a single partition of sampled pairs;
   *     non-splitting nodes' samples are dropped as each partition
   *     folds in. Driver memory is sized by the plane map alone;
-  *  4. one narrow pass advances every routed row's breadcrumb through
-  *     the new planes (broadcast of this level's planes only).
+  *  4. one narrow pass re-routes every row through all planes so far —
+  *     a broadcast [[CompactIndex.fromPlanes]] walked by the routing
+  *     UDF of [[DistributedAnnModel.assignLeaves]] — which re-derives
+  *     its breadcrumb and takes one step further where its leaf split.
   *
   * `maxDepth` bounds the plane count (≤ numTrees·2^maxDepth), keeping
   * the query-routing broadcast small no matter the corpus size — at
@@ -85,6 +91,14 @@ case class DistributedAnnForest(
       val exploded = cur
         .select(col("__id"), col("__vec"), posexplode(col("__paths")).as(Seq("tree", "path")))
         .join(broadcast(openDf), Seq("tree", "path"))
+      // level 0's groups are the tree roots, which hold every row: the
+      // dim check rides on their aggregate (expected = the lowest id's
+      // dim, as in AnnForest.fit; lo/hi = the (dims, id) extremes)
+      val dims = size(col("__vec"))
+      val dimCheck =
+        if (depth > 0) Nil
+        else Seq(min_by(dims, col("__id")), min(struct(dims, col("__id"))),
+          max(struct(dims, col("__id"))))
       // toLocalIterator, not collect: the driver streams one shuffle
       // partition of per-node stats at a time, so the level's transient
       // footprint is (planes so far) + (one partition of samples), not
@@ -94,35 +108,26 @@ case class DistributedAnnForest(
         .groupBy(col("tree"), col("path"))
         .agg(
           count(lit(1)).as("n"),
-          min_by(col("__vec"), struct(h, col("__id"))).as("a"),
-          max_by(col("__vec"), struct(h, col("__id"))).as("b"))
+          min_by(col("__vec"), struct(h, col("__id"))).as("a") +:
+          max_by(col("__vec"), struct(h, col("__id"))).as("b") +: dimCheck: _*)
         .toLocalIterator()
 
       val newPlanes = scala.collection.mutable.Map.empty[(Int, Long), HyperPlane]
       stats.forEachRemaining { r =>
         val (tree, path, n) = (r.getInt(0), r.getLong(1), r.getLong(2))
+        if (depth == 0) Seq(r.getStruct(6), r.getStruct(7)).foreach { odd =>
+          require(odd.getInt(0) == r.getInt(5),
+            s"$vecCol: row ${odd.getLong(1)} has ${odd.getInt(0)} dims, expected ${r.getInt(5)}")
+        }
         if (n > maxLeafSize) {
           val a = r.getSeq[Float](3).toArray
-          val b = r.getSeq[Float](4).toArray
-          val dim = a.length
-          val nrm = new Array[Float](dim)
-          var i = 0
-          var degenerate = true
-          while (i < dim) {
-            nrm(i) = b(i) - a(i)
-            if (nrm(i) != 0f) degenerate = false
-            i += 1
-          }
+          val nrm = new Array[Float](a.length)
+          val c = CompactIndex.bisector(a, 0, r.getSeq[Float](4).toArray, 0, nrm)
           // a zero-normal plane (identical sample pair — e.g. colinear
           // raw vectors collapsing under cosine normalization) routes
           // every row one way and would re-split uselessly to maxDepth:
           // close the node as an (oversized) leaf instead
-          if (!degenerate) {
-            var c = 0.0
-            i = 0
-            while (i < dim) { c += nrm(i).toDouble * ((a(i).toDouble + b(i).toDouble) / 2.0); i += 1 }
-            newPlanes((tree, path)) = HyperPlane(nrm, (-c).toFloat)
-          }
+          if (nrm.exists(_ != 0f)) newPlanes((tree, path)) = HyperPlane(nrm, c)
         }
       }
       planes ++= newPlanes
@@ -131,18 +136,14 @@ case class DistributedAnnForest(
       open = newPlanes.keys.toSeq.flatMap { case (t, p) => Seq((t, 2 * p), (t, 2 * p + 1)) }
 
       if (newPlanes.nonEmpty) {
-        val bc = spark.sparkContext.broadcast(newPlanes.toMap)
-        val advance = udf { (vec: Seq[Float], paths: Seq[Long]) =>
-          val v = vec.toArray
-          paths.iterator.zipWithIndex.map { case (p, t) =>
-            bc.value.get((t, p)) match {
-              case Some(pl) => 2 * p + (if (pl.isAbove(v)) 1L else 0L)
-              case None => p
-            }
-          }.toSeq
-        }
+        // every row sits at a leaf of the planes so far, so walking them
+        // all from the roots re-derives its path and takes the one new
+        // step wherever its leaf just split
+        val bc = spark.sparkContext.broadcast(CompactIndex.fromPlanes(numTrees, planes))
+        val advance = AnnForestModel.routeUdf(bc, cosine = false,
+          spillEps = 0.0, maxLeavesPerTree = 1)
         val prev = cur
-        cur = cur.withColumn("__paths", advance(col("__vec"), col("__paths")))
+        cur = cur.withColumn("__paths", advance(col("__vec")).getField("_2"))
           .localCheckpoint() // eager: prev and this level's broadcast are
                              // dead once this materializes
         prev.unpersist()
@@ -170,12 +171,13 @@ class DistributedAnnModel(
     val corpusBuckets: DataFrame,
     preloadedZoneMaps: Option[DataFrame] = None) extends Serializable {
 
-  /** One plane broadcast per model instance, shared by every query
+  /** One routing broadcast per model instance, shared by every query
     * batch — re-broadcasting per assignLeaves call would leak a copy
     * (~200 MB at 50 trees × depth 14) into the block managers per
-    * batch in a standing-corpus serving loop. */
-  @transient private lazy val planesBc =
-    corpusBuckets.sparkSession.sparkContext.broadcast(planes)
+    * batch in a standing-corpus serving loop. The planes ship as a
+    * structure-only [[CompactIndex]] ([[CompactIndex.fromPlanes]]). */
+  @transient private lazy val routingBc =
+    corpusBuckets.sparkSession.sparkContext.broadcast(CompactIndex.fromPlanes(numTrees, planes))
 
   /** Per-bucket ZONE MAPS: centroid + covering radius of every
     * (tree_id, leaf_id) bucket — the vector analog of parquet row-group
@@ -211,11 +213,13 @@ class DistributedAnnModel(
       .localCheckpoint()
   }
 
-  /** Route queries to their (tree_id, leaf_id) buckets: walk the plane
-    * map from each root until the path leaves it (= a leaf). Narrow —
-    * one UDF over a broadcast of the plane map. `spillEps` > 0 probes
-    * BOTH children of any plane within eps (point-to-plane distance) of
-    * the vector — main-path-first, ≤ `maxLeavesPerTree` leaves per tree
+  /** Route queries to their (tree_id, leaf_id) buckets. Narrow: one
+    * UDF over a broadcast of the planes as a [[CompactIndex]], the
+    * routing UDF body [[AnnForestModel.assignLeaves]] uses too; a leaf
+    * id is a plane-map path (root 1, children 2p and 2p + 1), the same
+    * walk fit routed the corpus with. `spillEps` > 0 probes BOTH
+    * children of any plane within eps (point-to-plane distance) of the
+    * vector — main-path-first, ≤ `maxLeavesPerTree` leaves per tree
     * (see [[CompactIndex.leafPathsSpill]]; this is the query-side
     * recall knob that leaves the standing corpus buckets untouched).
     * A null vector or one whose length differs from the planes' fails
@@ -223,49 +227,7 @@ class DistributedAnnModel(
   def assignLeaves(queries: DataFrame, idCol: String = "query_id",
       vecCol: String = "qvec",
       spillEps: Double = 0.0, maxLeavesPerTree: Int = 4): DataFrame = {
-    // fail fast on the driver: a 0-leaf budget inside the routing UDF
-    // would silently route every query to nothing
-    require(spillEps <= 0.0 || maxLeavesPerTree >= 1,
-      s"maxLeavesPerTree must be >= 1 when spilling, got $maxLeavesPerTree")
-    val bc = planesBc
-    val nt = numTrees
-    val cosine = metric == "cosine"
-    val route = udf { (vec: Seq[Float]) =>
-      val v0 = vec.toArray
-      val v = if (cosine) AnnForestModel.l2NormalizeJvm(v0) else v0
-      if (spillEps <= 0.0) {
-        (0 until nt).map { t =>
-          var p = 1L
-          var pl = bc.value.get((t, p))
-          while (pl.isDefined) {
-            p = 2 * p + (if (pl.get.isAbove(v)) 1L else 0L)
-            pl = bc.value.get((t, p))
-          }
-          (t, p)
-        }
-      } else {
-        (0 until nt).flatMap { t =>
-          val found = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-          var stack = List(1L)
-          while (stack.nonEmpty && found.length < maxLeavesPerTree) {
-            val p = stack.head
-            stack = stack.tail
-            bc.value.get((t, p)) match {
-              case None => found += ((t, p)) // no plane ⇒ leaf
-              case Some(pl) =>
-                val m = pl.signedMargin(v)
-                val above = m >= 0.0
-                val main = 2 * p + (if (above) 1L else 0L)
-                // backup below main so the single-path child pops first
-                if (math.abs(m) < spillEps * pl.norm)
-                  stack = (2 * p + (if (above) 0L else 1L)) :: stack
-                stack = main :: stack
-            }
-          }
-          found
-        }
-      }
-    }
+    val route = AnnForestModel.routeUdf(routingBc, metric == "cosine", spillEps, maxLeavesPerTree)
     // The vector check is a column expression, not part of the UDF: a
     // radius join's dist filter makes Catalyst infer isnotnull(__qv)
     // and push it below the routing, where it would silently drop a
@@ -380,7 +342,7 @@ class DistributedAnnModel(
   /** Append new vectors to the standing corpus without a rebuild: route
     * them through the FROZEN plane set (the same leaves queries probe)
     * and union the routed rows into the buckets. Narrow — one
-    * broadcast-plane UDF pass over the new rows plus a union; this is
+    * [[assignLeaves]] pass over the new rows plus a union; this is
     * the ingest path for a standing vector store (batch backfill or a
     * foreachBatch streaming sink). Buckets grow with appended data
     * (planes are not re-fit); re-fit when bucket sizes drift far past

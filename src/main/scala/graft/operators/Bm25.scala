@@ -109,7 +109,7 @@ object Bm25 {
     // can never serve mixed tables, and the stale-tombstone hazard
     // (old tombstones applied to fresh tables = silently wrong scores)
     // is closed without ordering games.
-    setBuilding(spark, name, on = true)
+    CountStore.setBuilding(spark, name, on = true)
     graft.sources.Sinks.dropTable(spark, s"${name}_tombstones")
     // a rebuild over a new corpus must not leave a previous corpus's
     // derived tiers behind — phrase/tiered serving would silently mix
@@ -158,7 +158,7 @@ object Bm25 {
     // build did.
     spark.catalog.refreshTable(s"${name}_postings")
     spark.catalog.refreshTable(s"${name}_doclens")
-    setBuilding(spark, name, on = false)
+    CountStore.setBuilding(spark, name, on = false)
   }
 
   /** The bucket count a catalog table was written with (None for an
@@ -168,24 +168,6 @@ object Bm25 {
     spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
       .bucketSpec.map(_.numBuckets)
-
-  /** The build-in-progress marker is a plain warehouse file, not a
-    * catalog entry — it must survive the JVM and be visible to a fresh
-    * catalog, exactly like the table directories it guards. */
-  private def buildingMarker(spark: org.apache.spark.sql.SparkSession,
-      name: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      name.toLowerCase(java.util.Locale.ROOT) + "__building")
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def setBuilding(spark: org.apache.spark.sql.SparkSession,
-      name: String, on: Boolean): Unit = {
-    val (fs, p) = buildingMarker(spark, name)
-    if (on) fs.create(p, true).close()
-    else fs.delete(p, false)
-  }
 
   /** Operational introspection of a standing index: (metric, value)
     * rows for the numbers a compaction policy reads — indexed vs
@@ -238,9 +220,13 @@ object Bm25 {
       spark.table(s"${name}_champions").agg(count(lit(1)))))
   }
 
+  /** Refuses an index whose build-in-progress marker is down. The
+    * marker is [[CountStore]]'s torn-write marker: a plain warehouse
+    * file, not a catalog entry, so it survives the JVM and is visible to
+    * a fresh catalog, exactly like the table directories it guards. */
   private def requireServable(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit = {
-    val (fs, p) = buildingMarker(spark, name)
+    val (fs, p) = CountStore.marker(spark, name)
     require(!fs.exists(p),
       s"index '$name': a rebuild is in progress or was interrupted " +
         s"(marker $p present) — rerun buildIndex")
@@ -316,7 +302,7 @@ object Bm25 {
       s"mergeIndexes: $overlap doc ids present in BOTH '$a' and '$b' — " +
         "federation requires doc-disjoint sides (an overlapping doc " +
         "would double-count df and corpus stats)")
-    setBuilding(spark, out, on = true)
+    CountStore.setBuilding(spark, out, on = true)
     graft.sources.Sinks.dropTable(spark, s"${out}_tombstones")
     graft.sources.Sinks.dropTable(spark, s"${out}_positions")
     graft.sources.Sinks.dropTable(spark, s"${out}_champions")
@@ -358,7 +344,7 @@ object Bm25 {
         Seq(() => graft.sources.Sinks.parquetBucketed(both("_positions"),
           s"${out}_positions", buckets, Seq("term"), Seq("term")))
       else Nil): _*)
-    setBuilding(spark, out, on = false)
+    CountStore.setBuilding(spark, out, on = false)
   }
 
   /** Incremental index maintenance: fold NEW documents into a standing
@@ -428,7 +414,7 @@ object Bm25 {
       require(have == buckets,
         s"appendDocs: $t is bucketed $have-way but buckets=$buckets was " +
           "passed — use the table's own bucket count")
-    setBuilding(spark, name, on = true)
+    CountStore.setBuilding(spark, name, on = true)
     val toks = docs.select(col(idCol),
       explode(TextAnalysis.tokens(col(textCol))).as("term"))
     val dl2 = docs.select(col(idCol),
@@ -488,7 +474,7 @@ object Bm25 {
       () => graft.sources.Sinks.parquetBucketed(
         mergedTerms, s"${name}_terms", buckets, Seq("term"), Seq("term")),
       () => graft.sources.Sinks.parquetTable(mergedStats, s"${name}_stats"))
-    setBuilding(spark, name, on = false)
+    CountStore.setBuilding(spark, name, on = false)
   }
 
   /** The [[appendDocs]] derived-table refresh plans, exposed so PlanSpec
@@ -541,7 +527,7 @@ object Bm25 {
     if (!spark.catalog.tableExists(s"${name}_tombstones")) return
     val tomb = spark.table(s"${name}_tombstones").select(col(idCol)).distinct()
     // the rewrite is a build: marker down while the tables are torn
-    setBuilding(spark, name, on = true)
+    CountStore.setBuilding(spark, name, on = true)
     val hasPos = spark.catalog.tableExists(s"${name}_positions")
     val staged = Seq(s"${name}_postings", s"${name}_doclens") ++
       (if (hasPos) Seq(s"${name}_positions") else Nil)
@@ -577,7 +563,7 @@ object Bm25 {
       spark.catalog.refreshTable(t)
     }
     graft.sources.Sinks.dropTable(spark, s"${name}_tombstones")
-    setBuilding(spark, name, on = false)
+    CountStore.setBuilding(spark, name, on = false)
   }
 
   /** Score a bag-of-terms query against a standing index built by
@@ -758,10 +744,10 @@ object Bm25 {
     val champ = graft.plans.TopKPerKey.perKey(
         w, Seq("term"), Seq("__negw", idCol), c)
       .select(col("term"), col(idCol))
-    setBuilding(spark, name, on = true)
+    CountStore.setBuilding(spark, name, on = true)
     graft.sources.Sinks.parquetBucketed(
       champ, s"${name}_champions", buckets, Seq("term"), Seq("term"))
-    setBuilding(spark, name, on = false)
+    CountStore.setBuilding(spark, name, on = false)
   }
 
   /** Top-k serving through the champion tier: candidates = the union
@@ -949,11 +935,11 @@ object Bm25 {
       s"buildPositional: index '$name' holds $nIdx docs but the corpus " +
         s"frame has $nDocs — positional and postings tables must be " +
         "built from the same snapshot")
-    setBuilding(spark, name, on = true)
+    CountStore.setBuilding(spark, name, on = true)
     graft.sources.Sinks.parquetBucketed(
       positionRows(docs, idCol, textCol),
       s"${name}_positions", buckets, Seq("term"), Seq("term"))
-    setBuilding(spark, name, on = false)
+    CountStore.setBuilding(spark, name, on = false)
   }
 
   /** Exact-phrase BM25 served from a standing positional index — scores

@@ -195,7 +195,7 @@ object CountStore {
   // batch can never silently double-count (either its ledger row
   // committed, or the marker is still down). Exactly-once OR loud.
 
-  private def marker(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def marker(spark: org.apache.spark.sql.SparkSession,
       name: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
     val p = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"),

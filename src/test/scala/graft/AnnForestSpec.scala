@@ -38,10 +38,14 @@ class AnnForestSpec extends SparkSpec {
 
   test("hyperplane bisector math matches hand computation") {
     // a=(0,0), b=(2,0): n=(2,0), mid=(1,0), c=-2 → plane 2x-2=0 (x=1)
-    val plane = HyperPlane(Array(2f, 0f), -2f)
-    assert(plane.isAbove(Array(3f, 5f)))   // x>1 → above
-    assert(!plane.isAbove(Array(0f, 5f)))  // x<1 → below
-    assert(plane.isAbove(Array(1f, 0f)))   // tie → above (ref hyperplane.rs:10)
+    val n = new Array[Float](2)
+    val c = CompactIndex.bisector(Array(0f, 0f), 0, Array(2f, 0f), 0, n)
+    assert(n.toSeq === Seq(2f, 0f) && c === -2f)
+    val plane = CompactIndex.fromPlanes(1, Map((0, 1L) -> HyperPlane(n, c)))
+    def above(v: Array[Float]) = plane.leafPaths(v).head._2 == 3L
+    assert(above(Array(3f, 5f)))   // x>1 → above
+    assert(!above(Array(0f, 5f)))  // x<1 → below
+    assert(above(Array(1f, 0f)))   // tie → above (ref hyperplane.rs:10)
   }
 
   test("traversal shortfall-spill on a hand-built tree (ref src/lib.rs:105-128)") {

@@ -42,6 +42,83 @@ class DistributedAnnForestSpec extends SparkSpec {
     leafKeys.foreach { k => assert(!model.planes.contains(k)) }
   }
 
+  /** Hex SHA-256 of `lines`, one per line. */
+  private def digest(lines: Iterator[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    lines.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
+  private def rawBits(v: Iterable[Float]): String =
+    v.map(f => Integer.toHexString(java.lang.Float.floatToRawIntBits(f))).mkString(",")
+
+  /** Every plane (key, raw coefficient and constant bits) in key order,
+    * then every bucket row (tree, leaf, id, raw vector bits) sorted. */
+  private def storeDigests(m: DistributedAnnModel): (String, String) = (
+    digest(m.planes.toSeq.sortBy(_._1).iterator.map { case ((t, p), pl) =>
+      s"$t $p ${rawBits(pl.coefficients)} ${rawBits(Seq(pl.constant))}" }),
+    digest(m.corpusBuckets.select("tree_id", "leaf_id", "neighbor_id", "__cvec")
+      .as[(Int, Long, Long, Seq[Float])].collect()
+      .sortBy(r => (r._1, r._2, r._3)).iterator
+      .map { case (t, l, id, v) => s"$t $l $id ${rawBits(v)}" }))
+
+  test("routing pin: planes, buckets, assignLeaves and compactBuckets are bit-identical") {
+    // corpus points and deterministic ±0.03-per-dim perturbations of
+    // them (pure arithmetic, no transcendental functions)
+    val queries = emb.select($"vec_id".as("query_id"), $"embedding".as("qvec"))
+      .unionByName(emb.select(($"vec_id" + 100000L).as("query_id"),
+        transform($"embedding", (x, i) =>
+          x + ((($"vec_id" * 31 + i) % 7) - 3) * 0.01).cast("array<float>").as("qvec")))
+    def routed(m: DistributedAnnModel, eps: Double, cap: Int): (Long, String) = {
+      val rows = m.assignLeaves(queries, spillEps = eps, maxLeavesPerTree = cap)
+        .select("query_id", "tree_id", "leaf_id").as[(Long, Int, Long)].collect().sorted
+      (rows.length.toLong, digest(rows.iterator.map { case (q, t, l) => s"$q $t $l" }))
+    }
+    val cos = DistributedAnnForest(numTrees = 10, maxLeafSize = 5, seed = 7L, metric = "cosine")
+      .fit(emb, "vec_id", "embedding")
+    val got = Seq(
+      "euclidean" -> model, "cosine" -> cos, "compacted" -> model.compactBuckets(8))
+      .flatMap { case (name, m) =>
+        val (planes, buckets) = storeDigests(m)
+        Seq(s"$name planes" -> planes, s"$name buckets" -> buckets) ++
+          (if (name == "compacted") Nil else {
+            val (n0, single) = routed(m, 0.0, 4)
+            val (n1, cap1) = routed(m, 0.25, 1)
+            val (n4, cap4) = routed(m, 0.25, 4)
+            // the spill pin only bites if spilling reaches extra leaves
+            assert(n0 === 2 * emb.count() * m.numTrees && n1 === n0 && n4 > n0)
+            Seq(s"$name route eps 0" -> single, s"$name route eps 0.25 cap 1" -> cap1,
+              s"$name route eps 0.25 cap 4" -> cap4)
+          })
+      }
+    val want = Seq(
+      "euclidean planes" ->
+        "4ab06f1a6ee5eda35d066a2e0a0b808e84d3413223552b8b0c78fbe918c84fd9",
+      "euclidean buckets" ->
+        "d1a046b28b60a3dad6b2a22c7f639cae2a9406ccfaf4c86e6bf57a20547e2c97",
+      "euclidean route eps 0" ->
+        "2c8190a07965b7b03386fecddce6cf99e94c742ec072f52e922e3f98cd4a4592",
+      "euclidean route eps 0.25 cap 1" ->
+        "2c8190a07965b7b03386fecddce6cf99e94c742ec072f52e922e3f98cd4a4592",
+      "euclidean route eps 0.25 cap 4" ->
+        "a094000cda132dc7f5f8f93dc2b813377303c04347ec9c57e96c8812bb61fba0",
+      "cosine planes" ->
+        "ad7a0d2e27b084711401287e9b39f5c1396ce48fbadc28f934e22977e08bdcbf",
+      "cosine buckets" ->
+        "370caac5e0a9071adc41d420eb6ab1e6bb5a8be3c76afb3be5968b2b62fa714c",
+      "cosine route eps 0" ->
+        "528908927309ed1cacf475bfcfd177de2e5f1260d921158424444ff78321e76c",
+      "cosine route eps 0.25 cap 1" ->
+        "528908927309ed1cacf475bfcfd177de2e5f1260d921158424444ff78321e76c",
+      "cosine route eps 0.25 cap 4" ->
+        "9332fb3cbb6f1afbd642bdb3be7c462f9ecb7f3b9c1fc8dc2e87eb54fb6bd1d0",
+      "compacted planes" ->
+        "a3035c60c6c3b273ad626ac423783804cf84a1c60135976d74594faaf1ab0272",
+      "compacted buckets" ->
+        "bd6075306cd3340b31309c8e6857763aa307894e4713900d00866e0548acaa0d")
+    assert(got === want)
+  }
+
   test("knnJoin: rank-1 self match and recall floor vs exact oracle") {
     val queries = emb.filter($"vec_id" < 50)
       .select($"vec_id".as("query_id"), $"embedding".as("qvec"))
@@ -508,6 +585,16 @@ class DistributedAnnForestSpec extends SparkSpec {
         val e = intercept[Exception](run(Seq(1L -> v).toDF("vec_id", "embedding")))
         assert(messages(e).contains(s"DistributedAnnModel routing: $why"), messages(e))
       }
+    }
+  }
+
+  test("fit rejects vectors of different lengths by name") {
+    Seq(65 -> 1000001L, 63 -> 1000002L).foreach { case (d, id) =>
+      val odd = Seq(id -> Array.fill(d)(0.5f)).toDF("vec_id", "embedding")
+      val e = intercept[IllegalArgumentException](
+        DistributedAnnForest(numTrees = 2, maxLeafSize = 5, seed = 1L)
+          .fit(emb.select("vec_id", "embedding").unionByName(odd)))
+      assert(e.getMessage.contains(s"embedding: row $id has $d dims, expected 64"), e.getMessage)
     }
   }
 
