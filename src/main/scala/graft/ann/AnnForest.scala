@@ -950,6 +950,21 @@ object AnnForestModel {
     }
   }
 
+  /** `vec` itself, or a named error for a null vector or one whose
+    * length is not `dim` (no length check when `dim` < 0), e.g.
+    * "`who`: vector has 65 dims, `expected`". A column expression rather
+    * than a check inside a UDF: an isnotnull filter Catalyst infers from
+    * a null-intolerant distance downstream is pushed below the UDF,
+    * where it would silently drop a null vector; on this expression it
+    * raises instead. */
+  private[ann] def checkedVector(vec: Column, dim: Int, who: String,
+      expected: String): Column =
+    when(vec.isNull, raise_error(lit(s"$who: vector is null")))
+      .when(lit(dim >= 0) && size(vec) =!= dim,
+        raise_error(concat(lit(s"$who: vector has "), size(vec).cast(StringType),
+          lit(s" dims, $expected"))))
+      .otherwise(vec)
+
   /** JVM-side one-pass L2 normalization (zero vectors pass through). */
   private[ann] def l2NormalizeJvm(q: Array[Float]): Array[Float] = {
     var n = 0.0

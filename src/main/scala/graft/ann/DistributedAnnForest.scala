@@ -228,18 +228,14 @@ class DistributedAnnModel(
       vecCol: String = "qvec",
       spillEps: Double = 0.0, maxLeavesPerTree: Int = 4): DataFrame = {
     val route = AnnForestModel.routeUdf(routingBc, metric == "cosine", spillEps, maxLeavesPerTree)
-    // The vector check is a column expression, not part of the UDF: a
-    // radius join's dist filter makes Catalyst infer isnotnull(__qv)
-    // and push it below the routing, where it would silently drop a
-    // null vector. Every plane has the corpus's length; with no planes
-    // each tree is one root leaf and any vector routes there.
+    // The vector check is a column expression, not part of the UDF (a
+    // radius join's dist filter infers isnotnull(__qv) below it; see
+    // checkedVector). Every plane has the corpus's length; with no
+    // planes each tree is one root leaf and any vector routes there.
     val v = col(vecCol).cast(ArrayType(FloatType))
     val dim = planes.headOption.fold(-1)(_._2.coefficients.length)
-    val checked = when(v.isNull, raise_error(lit("DistributedAnnModel routing: vector is null")))
-      .when(lit(dim >= 0) && size(v) =!= dim,
-        raise_error(concat(lit("DistributedAnnModel routing: vector has "),
-          size(v).cast(StringType), lit(s" dims, the planes have $dim"))))
-      .otherwise(v)
+    val checked = AnnForestModel.checkedVector(v, dim,
+      "DistributedAnnModel routing", s"the planes have $dim")
     queries
       .select(col(idCol).cast(LongType).as("query_id"), checked.as("__qv"))
       // explode_outer as defense against InferFiltersFromGenerate: with

@@ -46,10 +46,7 @@ case class IvfIndex(nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L,
     val uniform =
       if (n <= sampleCap) sampled
       else sampled.sample(math.min(1.0, sampleCap.toDouble / n), seed)
-    val train: Array[Array[Float]] = uniform
-      .select(col(vecCol).cast("array<float>"))
-      .collect()
-      .map(_.getSeq[Float](0).toArray)
+    val train = IvfModel.trainingSet(uniform, vecCol, "IVF fit")
     require(train.nonEmpty, "IVF fit: empty training set")
     new IvfModel(IvfIndex.lloyd(train, nlist, iters = 8, seed), nprobe)
   }
@@ -141,6 +138,22 @@ object IvfModel {
     acc
   }
 
+  /** The collected training vectors, refused by name when one is null
+    * or their lengths differ — Lloyd would otherwise fail on a bare
+    * NullPointerException or compare vectors of different lengths. */
+  private[ann] def trainingSet(df: DataFrame, vecCol: String,
+      who: String): Array[Array[Float]] = {
+    val train = df.select(col(vecCol).cast("array<float>")).collect()
+      .map { r =>
+        require(!r.isNullAt(0), s"$who: a training vector in $vecCol is null")
+        r.getSeq[Float](0).toArray
+      }
+    val dims = train.map(_.length).distinct.sorted
+    require(dims.length <= 1,
+      s"$who: training vectors in $vecCol have ${dims.mkString(", ")} dims")
+    train
+  }
+
   private[ann] def nearestCells(
       centroids: Array[Array[Float]], v: Array[Float], n: Int): Array[Int] =
     centroids.indices.sortBy(i => sqDist(centroids(i), v)).take(n).toArray
@@ -162,19 +175,26 @@ class IvfModel(val centroids: Array[Array[Float]], val nprobe: Int)
 
   /** One row per probed cell: (input cols…, cell INT). n=1 for corpus
     * assignment, n=nprobe for queries. The closure captures only the
-    * centroid array — no per-row allocation beyond the probe result. */
+    * centroid array — no per-row allocation beyond the probe result.
+    * `vecCol` is replaced by its [[AnnForestModel.checkedVector]] form,
+    * so a null vector or one of another length than the centroids fails
+    * by name. */
   def assignCells(df: DataFrame, vecCol: String, n: Int): DataFrame = {
     val cs = centroids // stable reference for the closure (serialized once per task)
     val probes = udf { (v: Seq[Float]) =>
       IvfModel.nearestCells(cs, v.toArray, n)
     }
+    val dim = cs.headOption.fold(-1)(_.length)
     // explode_outer as defense against InferFiltersFromGenerate: no
     // filter is inferred on a direct UDF generator today (verified),
     // but a materialized probe column under a non-outer explode would
     // re-run the centroid scan 3× per row (bit
     // AnnForestModel.assignLeaves). nearestCells always returns
     // min(n, nlist) ≥ 1 cells, so outer ≡ inner.
-    df.withColumn("cell", explode_outer(probes(col(vecCol))))
+    df.withColumn(vecCol,
+        AnnForestModel.checkedVector(col(vecCol), dim,
+          "IVF cell assignment", s"expected $dim"))
+      .withColumn("cell", explode_outer(probes(col(vecCol))))
   }
 
   /** Approximate k-NN join: corpus in its home cell, queries probe

@@ -35,10 +35,7 @@ case class PqIndex(m: Int = 8, seed: Long = 42L, sampleCap: Int = 65536) {
     val uniform =
       if (n <= sampleCap) df
       else df.sample(math.min(1.0, sampleCap.toDouble / n), seed)
-    val train: Array[Array[Float]] = uniform
-      .select(col(vecCol).cast("array<float>"))
-      .collect()
-      .map(_.getSeq[Float](0).toArray)
+    val train = IvfModel.trainingSet(uniform, vecCol, "PQ fit")
     require(train.nonEmpty, "PQ fit: empty training set")
     val dim = train(0).length
     require(dim % m == 0, s"PQ fit: dim $dim not divisible by m=$m")
@@ -149,12 +146,16 @@ class PqModel(val codebooks: Array[Array[Array[Float]]], val dsub: Int)
 
   /** Append a `pq_code BINARY` column: the corpus compressed m bytes per
     * row. Narrow (no shuffle); at scale this is the write-once encode
-    * pass whose output is the standing compressed table. */
+    * pass whose output is the standing compressed table. A null vector
+    * or one of another length than the codebooks' `dim` fails by name
+    * ([[AnnForestModel.checkedVector]]). */
   def encode(df: DataFrame, vecCol: String = "embedding",
       outCol: String = "pq_code"): DataFrame = {
     val model = this
     val enc = udf { (v: Seq[Float]) => model.encodeVec(v.toArray) }
-    df.withColumn(outCol, enc(col(vecCol).cast("array<float>")))
+    df.withColumn(vecCol, AnnForestModel.checkedVector(col(vecCol), dim,
+        "PQ encode", s"expected $dim"))
+      .withColumn(outCol, enc(col(vecCol).cast("array<float>")))
   }
 
   /** Approximate k-NN join over the COMPRESSED corpus: the query batch
@@ -190,7 +191,13 @@ class PqModel(val codebooks: Array[Array[Array[Float]]], val dsub: Int)
     val qArr: Array[(Long, Array[Double])] = queries
       .select(col(queryId).cast("long"), col(queryVec).cast("array<float>"))
       .collect()
-      .map(r => (r.getLong(0), model.adcTable(r.getSeq[Float](1).toArray)))
+      .map { r =>
+        require(!r.isNullAt(1), s"PQ knnJoin: query ${r.get(0)} has a null vector")
+        val q = r.getSeq[Float](1).toArray
+        require(q.length == dim,
+          s"PQ knnJoin: query ${r.get(0)} has ${q.length} dims, expected $dim")
+        (r.getLong(0), model.adcTable(q))
+      }
     val bc = spark.sparkContext.broadcast(qArr)
     import spark.implicits._
     val partial = graft.GraftSession.widen(encodedCorpus)

@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one union + one re-aggregate + one rewrite, all of
   * MODEL size (vocab-bounded, ≪ corpus); the rewrite preserves the
-  * table's bucketed layout so serving joins keep bucket-pruning. */
+  * table's bucketed layout so serving joins keep bucket-pruning. This
+  * whole-table rewrite is the one layout every count store has. */
 object CountStore {
 
   /** Validate-then-write is SPLIT so a multi-table store (NB: counts +
@@ -66,125 +67,6 @@ object CountStore {
     write(table, prepareSigned(table, delta, keyCols, cntCols, sign),
       buckets, bucketCols)
 
-  // ---- prefix-pruned layout (v2) ----
-  // The plain merge rewrites the WHOLE model table per delta —
-  // model-sized, flat in the corpus (ProbeR15), but at a real 100 TB
-  // vocabulary the rewrite itself is GB-scale per wave. Layout v2
-  // Hive-partitions the model on `tok_pfx = pmod(xxhash64(firstKey),
-  // P)` (the fingerprint-log discipline applied to the MODEL) so a
-  // delta merge reads and dynamically overwrites ONLY the partitions
-  // the delta's keys touch: merge cost scales with delta-touched
-  // prefixes, not model size. Honest caveat (measured, ProbeR15X):
-  // natural-text deltas carry Zipf-common tokens that touch most
-  // prefixes, so the win is largest for rare-key deltas (tail
-  // vocabulary, id-keyed models) and bounded for common-token text.
-
-  /** The partition expression — one place, so store and probe can't
-    * drift. */
-  def pfxCol(keyCol: String, prefixes: Int): Column =
-    pmod(xxhash64(col(keyCol)), lit(prefixes))
-
-  /** Create a prefix-partitioned model table from a fresh count. */
-  def writePrefixedInit(table: String, counts: DataFrame,
-      keyCol: String, prefixes: Int): Unit = {
-    require(prefixes > 1, s"prefixes must be > 1, got $prefixes")
-    val spark = counts.sparkSession
-    graft.sources.Sinks.dropTable(spark, table)
-    counts.withColumn("tok_pfx", pfxCol(keyCol, prefixes))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("tok_pfx").saveAsTable(table)
-  }
-
-  /** How many prefixes a store's v2 layout declared (0 = plain
-    * layout). The declaration lives in `<name>_layout`, written once
-    * by the prefixed initStore — deriving P from anything else would
-    * let a mismatched merge hash keys into the WRONG partitions while
-    * the stale ones keep serving. */
-  def layoutPrefixes(spark: org.apache.spark.sql.SparkSession,
-      name: String): Int =
-    if (spark.catalog.tableExists(s"${name}_layout"))
-      spark.table(s"${name}_layout").head().getAs[Int]("prefixes")
-    else 0
-
-  private[operators] def writeLayout(spark: org.apache.spark.sql.SparkSession,
-      name: String, prefixes: Int): Unit = {
-    graft.sources.Sinks.dropTable(spark, s"${name}_layout")
-    if (prefixes > 0)
-      graft.sources.Sinks.parquetTable(
-        spark.range(1).select(lit(prefixes).as("prefixes")),
-        s"${name}_layout")
-  }
-
-  /** Prefix-pruned prepare: settle + validate ONLY the delta-touched
-    * partitions (untouched ones cannot change, so non-negativity over
-    * the touched slice is the whole check). Returns the surviving
-    * rows plus the touched prefix set for [[writePrefixed]] — split
-    * like [[prepareSigned]]/[[write]] so multi-table stores validate
-    * EVERY table before writing ANY. */
-  def preparePrefixed(table: String, delta: DataFrame,
-      keyCols: Seq[String], cntCols: Seq[String], sign: Long,
-      prefixes: Int): (DataFrame, Seq[Long]) = {
-    val spark = delta.sparkSession
-    require(spark.catalog.tableExists(table),
-      s"count store table '$table' does not exist — run initStore first")
-    require(spark.table(table).columns.contains("tok_pfx"),
-      s"$table is not prefix-partitioned — use prepareSigned for the " +
-        "plain layout")
-    val signed = delta.select(
-        keyCols.map(col) ++ cntCols.map(c => (col(c) * sign).as(c)): _*)
-      .withColumn("tok_pfx", pfxCol(keyCols.head, prefixes))
-      .localCheckpoint()
-    val touched = signed.select(col("tok_pfx")).distinct()
-      .collect().map(_.getLong(0)).toIndexedSeq
-    val merged = spark.table(table)
-      .filter(col("tok_pfx").isin(touched: _*))
-      .unionByName(signed)
-      .groupBy((keyCols.map(col) :+ col("tok_pfx")): _*)
-      .agg(sum(col(cntCols.head)).as(cntCols.head),
-        cntCols.tail.map(c => sum(col(c)).as(c)): _*)
-      .localCheckpoint() // settle BEFORE overwriting what we read
-    val neg = merged.filter(
-      cntCols.map(c => col(c) < 0).reduce(_ || _)).count()
-    require(neg == 0,
-      s"$table: $neg rows went negative — the removal was never " +
-        "(fully) appended; store unchanged, nothing written")
-    // layout-drift guard (r11 advice): nothing else verifies that the
-    // DECLARED prefix count matches how the table's rows were actually
-    // hashed — a hand-restored warehouse where `_layout` and the data
-    // disagree would hash delta keys into the wrong partitions while
-    // stale ones keep serving. Recomputing the prefix on the (settled,
-    // delta-touched-sized) merged slice catches both a wrong P and
-    // mis-placed rows, at no extra scan beyond the slice the merge
-    // already read.
-    val drifted = merged.filter(
-      pfxCol(keyCols.head, prefixes) =!= col("tok_pfx")).count()
-    require(drifted == 0,
-      s"$table: $drifted rows sit in partitions that do not match the " +
-        s"declared prefix count $prefixes — the `_layout` declaration and " +
-        "the table's physical layout have drifted; rebuild via initStore")
-    (merged.filter(cntCols.map(c => col(c) =!= 0).reduce(_ || _))
-      .localCheckpoint(), touched)
-  }
-
-  /** Commit a prepared prefixed merge: dynamically overwrite exactly
-    * the touched partitions. A touched prefix whose rows all cancel
-    * to zero is dropped via ALTER TABLE (dynamic overwrite only
-    * replaces partitions PRESENT in the written data — without the
-    * drop, fully-cancelled partitions would serve stale rows). The
-    * insert routes through [[graft.sources.Sinks.insertPartitionsDynamic]]
-    * — the engine's ONE locked partitioned-insertInto path (r14
-    * verdict #3: the session-conf toggle is only sound while every
-    * partitioned insert shares the lock). */
-  def writePrefixed(table: String, live: DataFrame,
-      touched: Seq[Long]): Unit = {
-    val spark = live.sparkSession
-    val surviving = live.select(col("tok_pfx")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    graft.sources.Sinks.insertPartitionsDynamic(table, live)
-    for (p <- touched if !surviving.contains(p))
-      spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (tok_pfx=$p)")
-  }
-
   // ---- torn-write marker + streaming idempotence ledger ----
   // A count-store commit spans several table rewrites; a crash between
   // them leaves tables from two model states. The Bm25 discipline
@@ -220,13 +102,30 @@ object CountStore {
     fs.exists(p)
   }
 
+  /** Refuses a torn store (marker down) and a store still in the
+    * removed prefix-partitioned layout, which declared itself in a
+    * `<name>_layout` table: its tables carry a hash-prefix partition
+    * column that the merges and serves do not expect. */
   def requireServable(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit = {
     val (fs, p) = marker(spark, name)
     require(!fs.exists(p),
       s"count store '$name': a commit is in progress or was interrupted " +
         s"(marker $p present) — rebuild via initStore")
+    val layout = s"${name}_layout"
+    require(!spark.catalog.tableExists(layout) &&
+      !fs.exists(new org.apache.hadoop.fs.Path(p.getParent,
+        layout.toLowerCase(java.util.Locale.ROOT))),
+      s"count store '$name' was written in the removed prefix-partitioned " +
+        s"layout ($layout present) — rebuild it with initStore")
   }
+
+  /** Drop a leftover `<name>_layout` declaration — every initStore and
+    * mergeStores writes a fresh plain store, so this is the repair
+    * path for a store [[requireServable]] refuses. */
+  private[operators] def dropLayout(spark: org.apache.spark.sql.SparkSession,
+      name: String): Unit =
+    graft.sources.Sinks.dropTable(spark, s"${name}_layout")
 
   /** Apply a streaming micro-batch's writes EXACTLY ONCE (or fail
     * loud): skip if `batchId` is already in `<name>_applied`;

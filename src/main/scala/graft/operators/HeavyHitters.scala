@@ -53,21 +53,17 @@ import org.apache.spark.sql.functions._
   * deferred via the fold's staleness backlog). */
 object HhStore {
 
-  /** `prefixes > 0` selects the PREFIX-PARTITIONED layout (v2, the
-    * NbStore discipline extended to the sketch families): `_hh` and
-    * `_hh_n` are Hive-partitioned on pmod(xxhash64(grp), P), so a
-    * wave's merge rewrites only the partitions holding the batch's
-    * GROUPS instead of the whole model — the lever for a store
-    * tracking many domains where each wave touches few. Layout is
-    * recorded in `<name>_layout`; merges auto-detect it. */
+  /** Sketch the corpus fresh into `_hh`, `_hh_n` and `_hh_params`;
+    * every merge rewrites the whole groups-sized tables. A rebuild is
+    * also the repair path for a torn or refused store. */
   def initStore(items: DataFrame, name: String, grpCol: String,
-      itemCol: String, k: Int, prefixes: Int = 0): Unit = {
+      itemCol: String, k: Int): Unit = {
     require(k > 0, s"k must be positive, got $k")
     val spark = items.sparkSession
     CountStore.setBuilding(spark, name, on = true)
     CountStore.dropLedger(spark, name)
     CountStore.clearStale(spark, name)
-    CountStore.writeLayout(spark, name, prefixes)
+    CountStore.dropLayout(spark, name)
     val c = counts(items, grpCol, itemCol).localCheckpoint()
     val (hh, off) = compressWithOffsets(c, k)
     val n = c.groupBy(col("grp")).agg(sum(col("cnt")).as("n"))
@@ -77,12 +73,8 @@ object HhStore {
     // three disjoint output tables from settled/pinned inputs — write
     // them concurrently (r14, guide §2.6)
     graft.util.Par.run(
-      () => if (prefixes > 0)
-          CountStore.writePrefixedInit(s"${name}_hh", hh, "grp", prefixes)
-        else graft.sources.Sinks.parquetTable(hh, s"${name}_hh"),
-      () => if (prefixes > 0)
-          CountStore.writePrefixedInit(s"${name}_hh_n", n, "grp", prefixes)
-        else graft.sources.Sinks.parquetTable(n, s"${name}_hh_n"),
+      () => graft.sources.Sinks.parquetTable(hh, s"${name}_hh"),
+      () => graft.sources.Sinks.parquetTable(n, s"${name}_hh_n"),
       () => graft.sources.Sinks.parquetTable(
         spark.range(1).select(lit(k).as("k")), s"${name}_hh_params"))
     CountStore.setBuilding(spark, name, on = false)
@@ -98,9 +90,9 @@ object HhStore {
     CountStore.requireServable(spark, name)
     if (CountStore.alreadyApplied(spark, name, batchId)) false
     else {
-      val (merged, n, pfx, touched) = mergedWith(batch, name, grpCol, itemCol)
+      val (merged, n) = mergedWith(batch, name, grpCol, itemCol)
       CountStore.applyOnce(spark, name, batchId) {
-        writeTables(spark, name, merged, n, pfx, touched)
+        writeTables(name, merged, n)
       }
     }
   }
@@ -111,44 +103,27 @@ object HhStore {
       itemCol: String): Unit = {
     val spark = batch.sparkSession
     CountStore.requireServable(spark, name)
-    val (merged, n, pfx, touched) = mergedWith(batch, name, grpCol, itemCol)
-    writeTables(spark, name, merged, n, pfx, touched)
+    val (merged, n) = mergedWith(batch, name, grpCol, itemCol)
+    writeTables(name, merged, n)
   }
 
-  private def writeTables(spark: SparkSession, name: String,
-      merged: DataFrame, n: DataFrame, pfx: Int, touched: Seq[Long]): Unit =
+  private def writeTables(name: String, merged: DataFrame,
+      n: DataFrame): Unit =
     // both frames are checkpoint-settled by mergedWith; the two tables
     // are disjoint — overwrite them concurrently (r14, guide §2.6)
     graft.util.Par.run(
-      () => if (pfx > 0) CountStore.writePrefixed(s"${name}_hh", merged, touched)
-        else graft.sources.Sinks.parquetTable(merged, s"${name}_hh"),
-      () => if (pfx > 0) CountStore.writePrefixed(s"${name}_hh_n", n, touched)
-        else graft.sources.Sinks.parquetTable(n, s"${name}_hh_n"))
+      () => graft.sources.Sinks.parquetTable(merged, s"${name}_hh"),
+      () => graft.sources.Sinks.parquetTable(n, s"${name}_hh_n"))
 
-  /** The wave merge, layout-aware: on the v2 layout only the
-    * partitions holding the batch's groups are read and re-written
-    * (untouched groups provably cannot change — a merge only moves
-    * groups the batch carries). */
+  /** The wave merge: batch counts added into the stored counters,
+    * re-compressed, with the group totals folded alongside. */
   private def mergedWith(batch: DataFrame, name: String, grpCol: String,
-      itemCol: String): (DataFrame, DataFrame, Int, Seq[Long]) = {
+      itemCol: String): (DataFrame, DataFrame) = {
     val spark = batch.sparkSession
     val k = kOf(spark, name)
-    val pfx = CountStore.layoutPrefixes(spark, name)
     val bc = counts(batch, grpCol, itemCol).localCheckpoint()
-    val touched: Seq[Long] =
-      if (pfx > 0)
-        bc.select(CountStore.pfxCol("grp", pfx).as("p")).distinct()
-          .collect().map(_.getLong(0)).toIndexedSeq
-      else Nil
-    def slice(t: String): DataFrame =
-      if (pfx > 0)
-        spark.table(t).filter(col("tok_pfx").isin(touched: _*)).drop("tok_pfx")
-      else spark.table(t)
-    def withPfx(df: DataFrame): DataFrame =
-      if (pfx > 0) df.withColumn("tok_pfx", CountStore.pfxCol("grp", pfx))
-      else df
     val (merged0, off) = compressWithOffsets(
-      slice(s"${name}_hh").select(col("grp"), col("item"), col("cnt"))
+      spark.table(s"${name}_hh").select(col("grp"), col("item"), col("cnt"))
         .unionByName(bc)
         .groupBy(col("grp"), col("item"))
         .agg(sum(col("cnt")).as("cnt")), k)
@@ -160,17 +135,16 @@ object HhStore {
     // shared compress subtree evaluates on each side, same total work
     // as the sequential settles, half the wall).
     val Seq(merged, n) = graft.util.Par.eval(Seq(
-      () => withPfx(merged0)
-        .localCheckpoint(), // settle BEFORE overwriting what we read
-      () => withPfx(slice(s"${name}_hh_n")
+      () => merged0.localCheckpoint(), // settle BEFORE overwriting what we read
+      () => spark.table(s"${name}_hh_n")
         .unionByName(bc.groupBy(col("grp")).agg(sum(col("cnt")).as("n"))
           .withColumn("d", lit(0L)))
         .groupBy(col("grp")).agg(sum(col("n")).as("n"), sum(col("d")).as("d"))
         .join(off, Seq("grp"), "left")
         .select(col("grp"), col("n"),
-          (col("d") + coalesce(col("__off"), lit(0L))).as("d")))
+          (col("d") + coalesce(col("__off"), lit(0L))).as("d"))
         .localCheckpoint()))
-    (merged, n, pfx, touched)
+    (merged, n)
   }
 
   /** EXACT takedown for departures whose items are all untracked: if
@@ -187,36 +161,23 @@ object HhStore {
       itemCol: String): Boolean = {
     val spark = items.sparkSession
     CountStore.requireServable(spark, name)
-    val pfx = CountStore.layoutPrefixes(spark, name)
     val bc = counts(items, grpCol, itemCol).localCheckpoint()
-    val touched: Seq[Long] =
-      if (pfx > 0)
-        bc.select(CountStore.pfxCol("grp", pfx).as("p")).distinct()
-          .collect().map(_.getLong(0)).toIndexedSeq
-      else Nil
-    def slice(t: String): DataFrame =
-      if (pfx > 0)
-        spark.table(t).filter(col("tok_pfx").isin(touched: _*)).drop("tok_pfx")
-      else spark.table(t)
     val touchesTracked = !bc
-      .join(slice(s"${name}_hh").select(col("grp"), col("item")),
+      .join(spark.table(s"${name}_hh").select(col("grp"), col("item")),
         Seq("grp", "item"), "left_semi")
       .isEmpty
     if (touchesTracked) false
     else {
-      val n0 = slice(s"${name}_hh_n")
+      val n = spark.table(s"${name}_hh_n")
         .unionByName(bc.groupBy(col("grp"))
           .agg((-sum(col("cnt"))).as("n")).withColumn("d", lit(0L)))
         .groupBy(col("grp")).agg(sum(col("n")).as("n"), sum(col("d")).as("d"))
-      val n = (if (pfx > 0)
-        n0.withColumn("tok_pfx", CountStore.pfxCol("grp", pfx)) else n0)
         .localCheckpoint()
       val neg = n.filter(col("n") < 0).count()
       require(neg == 0,
         s"$name: $neg group totals went negative — a departure was " +
           "removed that was never added; store unchanged")
-      if (pfx > 0) CountStore.writePrefixed(s"${name}_hh_n", n, touched)
-      else graft.sources.Sinks.parquetTable(n, s"${name}_hh_n")
+      graft.sources.Sinks.parquetTable(n, s"${name}_hh_n")
       true
     }
   }
@@ -243,7 +204,7 @@ object HhStore {
     * looser k to bound both sides and silently weaken the tighter
     * side's declared envelope; loud beats subtle. */
   def mergeStores(spark: SparkSession, a: String, b: String,
-      out: String, prefixes: Int = 0): Unit = {
+      out: String): Unit = {
     CountStore.requireServable(spark, a)
     CountStore.requireServable(spark, b)
     require(out != a && out != b,
@@ -256,17 +217,16 @@ object HhStore {
     CountStore.setBuilding(spark, out, on = true)
     CountStore.dropLedger(spark, out)
     CountStore.mergeStale(spark, a, b, out)
-    CountStore.writeLayout(spark, out, prefixes)
-    def side(t: String) = spark.table(t).drop("tok_pfx")
+    CountStore.dropLayout(spark, out)
     // legacy (pre-d) side: bake the classic floor(n/(k+1)) in as its d
     // — valid there by the topHitters argument (no removal ever ran on
     // a d-less store), and a sum of valid bounds is a valid bound
     def sideN(t: String) = {
-      val df = side(t)
+      val df = spark.table(t)
       if (df.columns.contains("d")) df
       else df.withColumn("d", floor(col("n") / (ka + 1)).cast("long"))
     }
-    val summed = side(s"${a}_hh").unionByName(side(s"${b}_hh"))
+    val summed = spark.table(s"${a}_hh").unionByName(spark.table(s"${b}_hh"))
       .groupBy(col("grp"), col("item"))
       .agg(sum(col("cnt")).as("cnt"))
     val (hh, off) = compressWithOffsets(summed, ka)
@@ -277,12 +237,8 @@ object HhStore {
         (col("d") + coalesce(col("__off"), lit(0L))).as("d"))
     // disjoint outputs — overlap the three writes (r14, guide §2.6)
     graft.util.Par.run(
-      () => if (prefixes > 0)
-          CountStore.writePrefixedInit(s"${out}_hh", hh, "grp", prefixes)
-        else graft.sources.Sinks.parquetTable(hh, s"${out}_hh"),
-      () => if (prefixes > 0)
-          CountStore.writePrefixedInit(s"${out}_hh_n", n, "grp", prefixes)
-        else graft.sources.Sinks.parquetTable(n, s"${out}_hh_n"),
+      () => graft.sources.Sinks.parquetTable(hh, s"${out}_hh"),
+      () => graft.sources.Sinks.parquetTable(n, s"${out}_hh_n"),
       () => graft.sources.Sinks.parquetTable(
         spark.range(1).select(lit(ka).as("k")), s"${out}_hh_params"))
     CountStore.setBuilding(spark, out, on = false)
@@ -359,10 +315,10 @@ object HhStore {
   def drift(spark: SparkSession, nameA: String, nameB: String): DataFrame = {
     CountStore.requireServable(spark, nameA)
     CountStore.requireServable(spark, nameB)
-    def hh(n: String, suf: String) = spark.table(s"${n}_hh").drop("tok_pfx")
+    def hh(n: String, suf: String) = spark.table(s"${n}_hh")
       .select(col("grp"), col("item"), col("cnt").as(s"cnt$suf"))
     def nd(n: String, suf: String) = {
-      val t = spark.table(s"${n}_hh_n").drop("tok_pfx")
+      val t = spark.table(s"${n}_hh_n")
       val d = if (t.columns.contains("d")) col("d")
         else floor(col("n") / (kOf(spark, n) + 1)).cast("long")
       t.select(col("grp"), col("n").as(s"n$suf"), d.as(s"d$suf"))

@@ -151,31 +151,23 @@ object NbClassifier {
   * zeros, so the store always equals SOME corpus's fresh fit. */
 object NbStore {
 
-  /** `prefixes > 0` selects the PREFIX-PARTITIONED layout (v2): the
-    * counts table is Hive-partitioned on pmod(xxhash64(token), P), so
-    * every later merge rewrites only the delta-touched partitions
-    * instead of the whole model — the 100 TB-vocabulary lever
-    * (CountStore scaladoc; ProbeR15X measured both layouts, including
-    * the honest Zipf caveat). The class table stays plain (it is
-    * class-count-sized). Layout choice is recorded in
-    * `<name>_layout`; merges auto-detect it. */
+  /** Fit the store fresh: `<name>_counts` bucketed by token,
+    * `<name>_class` plain. A rebuild is also the repair path for a
+    * torn or refused store. */
   def initStore(train: DataFrame, name: String, buckets: Int = 32,
-      textCol: String = "text", labelCol: String = "label",
-      prefixes: Int = 0): Unit = {
+      textCol: String = "text", labelCol: String = "label"): Unit = {
     val spark = train.sparkSession
     val (cc, byClass) = NbClassifier.modelFrames(train, textCol, labelCol)
     // a rebuild clears a torn-commit marker (this IS the repair path)
     // and the stream-idempotence ledger (new model, new stream state)
     CountStore.setBuilding(spark, name, on = true)
     CountStore.dropLedger(spark, name)
-    CountStore.writeLayout(spark, name, prefixes)
+    CountStore.dropLayout(spark, name)
     // disjoint outputs — write counts and class tables concurrently
     // (r14, guide §2.6)
     graft.util.Par.run(
-      () => if (prefixes > 0)
-          CountStore.writePrefixedInit(s"${name}_counts", cc, "token", prefixes)
-        else graft.sources.Sinks.parquetBucketed(cc, s"${name}_counts",
-          buckets, Seq("token"), Seq("token")),
+      () => graft.sources.Sinks.parquetBucketed(cc, s"${name}_counts",
+        buckets, Seq("token"), Seq("token")),
       () => graft.sources.Sinks.parquetTable(byClass, s"${name}_class"))
     CountStore.setBuilding(spark, name, on = false)
   }
@@ -196,30 +188,14 @@ object NbStore {
       textCol: String, labelCol: String, sign: Long): Unit = {
     val spark = docs.sparkSession
     CountStore.requireServable(spark, name)
-    val pfx = CountStore.layoutPrefixes(spark, name)
-    if (pfx > 0) {
-      val (dcc, dby) = NbClassifier.modelFrames(docs, textCol, labelCol)
-      // validate BOTH merges before writing EITHER (the prepared()
-      // contract, kept across layouts)
-      val (cc, touched) = CountStore.preparePrefixed(s"${name}_counts",
-        dcc, Seq("token", "label"), Seq("cnt"), sign, pfx)
-      val by = CountStore.prepareSigned(s"${name}_class", dby,
-        Seq("label"), Seq("n_c", "t_c"), sign)
-      CountStore.setBuilding(spark, name, on = true)
-      // both frames settled by prepare — disjoint tables, write
-      // concurrently (r14, guide §2.6)
-      graft.util.Par.run(
-        () => CountStore.writePrefixed(s"${name}_counts", cc, touched),
-        () => CountStore.write(s"${name}_class", by, 0, Nil))
-      CountStore.setBuilding(spark, name, on = false)
-    } else {
-      val (cc, by) = prepared(docs, name, textCol, labelCol, sign)
-      CountStore.setBuilding(spark, name, on = true)
-      graft.util.Par.run(
-        () => CountStore.write(s"${name}_counts", cc, buckets, Seq("token")),
-        () => CountStore.write(s"${name}_class", by, 0, Nil))
-      CountStore.setBuilding(spark, name, on = false)
-    }
+    val (cc, by) = prepared(docs, name, textCol, labelCol, sign)
+    CountStore.setBuilding(spark, name, on = true)
+    // both frames settled by prepare — disjoint tables, write
+    // concurrently (r14, guide §2.6)
+    graft.util.Par.run(
+      () => CountStore.write(s"${name}_counts", cc, buckets, Seq("token")),
+      () => CountStore.write(s"${name}_class", by, 0, Nil))
+    CountStore.setBuilding(spark, name, on = false)
   }
 
   /** BOTH merges validated (non-negativity, settled) before EITHER
@@ -256,8 +232,7 @@ object NbStore {
     * no backlog to inherit; [[CountStore.mergeStale]] still runs for
     * uniformity (a no-op on fresh sides). */
   def mergeStores(spark: org.apache.spark.sql.SparkSession, a: String,
-      b: String, out: String, buckets: Int = 32,
-      prefixes: Int = 0): Unit = {
+      b: String, out: String, buckets: Int = 32): Unit = {
     CountStore.requireServable(spark, a)
     CountStore.requireServable(spark, b)
     require(out != a && out != b,
@@ -266,8 +241,7 @@ object NbStore {
     CountStore.setBuilding(spark, out, on = true)
     CountStore.dropLedger(spark, out)
     CountStore.mergeStale(spark, a, b, out)
-    CountStore.writeLayout(spark, out, prefixes)
-    def side(t: String) = spark.table(t).drop("tok_pfx")
+    CountStore.dropLayout(spark, out)
     // counts summed via a FULL-OUTER co-bucketed join, NOT
     // union+groupBy: a union of two co-bucketed scans + groupBy on
     // keys containing the bucket key plans without the merging
@@ -275,8 +249,8 @@ object NbStore {
     // shuffle.partitions matches the bucket count
     // (BucketedUnionHazardSpec pins both). The join is the legitimate
     // co-bucketed path: same-index buckets pair, zero shuffle.
-    val cc = side(s"${a}_counts").withColumnRenamed("cnt", "__ca")
-      .join(side(s"${b}_counts").withColumnRenamed("cnt", "__cb"),
+    val cc = spark.table(s"${a}_counts").withColumnRenamed("cnt", "__ca")
+      .join(spark.table(s"${b}_counts").withColumnRenamed("cnt", "__cb"),
         Seq("label", "token"), "full_outer")
       .select(col("label"), col("token"),
         (coalesce(col("__ca"), lit(0L)) +
@@ -287,10 +261,8 @@ object NbStore {
       .agg(sum(col("n_c")).as("n_c"), sum(col("t_c")).as("t_c"))
     // disjoint outputs — overlap the two writes (r14, guide §2.6)
     graft.util.Par.run(
-      () => if (prefixes > 0)
-          CountStore.writePrefixedInit(s"${out}_counts", cc, "token", prefixes)
-        else graft.sources.Sinks.parquetBucketed(cc, s"${out}_counts",
-          buckets, Seq("token"), Seq("token")),
+      () => graft.sources.Sinks.parquetBucketed(cc, s"${out}_counts",
+        buckets, Seq("token"), Seq("token")),
       () => graft.sources.Sinks.parquetTable(byClass, s"${out}_class"))
     CountStore.setBuilding(spark, out, on = false)
   }
@@ -328,23 +300,10 @@ object NbStore {
     // batch must skip without paying the merge computation
     if (CountStore.alreadyApplied(spark, name, batchId)) false
     else {
-      val pfx = CountStore.layoutPrefixes(spark, name)
-      if (pfx > 0) {
-        val (dcc, dby) = NbClassifier.modelFrames(batch, textCol, labelCol)
-        val (cc, touched) = CountStore.preparePrefixed(s"${name}_counts",
-          dcc, Seq("token", "label"), Seq("cnt"), sign = 1L, pfx)
-        val by = CountStore.prepareSigned(s"${name}_class", dby,
-          Seq("label"), Seq("n_c", "t_c"), sign = 1L)
-        CountStore.applyOnce(spark, name, batchId) {
-          CountStore.writePrefixed(s"${name}_counts", cc, touched)
-          CountStore.write(s"${name}_class", by, 0, Nil)
-        }
-      } else {
-        val (cc, by) = prepared(batch, name, textCol, labelCol, sign = 1L)
-        CountStore.applyOnce(spark, name, batchId) {
-          CountStore.write(s"${name}_counts", cc, buckets, Seq("token"))
-          CountStore.write(s"${name}_class", by, 0, Nil)
-        }
+      val (cc, by) = prepared(batch, name, textCol, labelCol, sign = 1L)
+      CountStore.applyOnce(spark, name, batchId) {
+        CountStore.write(s"${name}_counts", cc, buckets, Seq("token"))
+        CountStore.write(s"${name}_class", by, 0, Nil)
       }
     }
   }
@@ -355,10 +314,7 @@ object NbStore {
       docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     CountStore.requireServable(spark, name)
-    // drop is a no-op on the plain layout; on v2 it hides the
-    // partition scaffolding from the scorer
-    NbClassifier.scoreWith(docs,
-      spark.table(s"${name}_counts").drop("tok_pfx"),
+    NbClassifier.scoreWith(docs, spark.table(s"${name}_counts"),
       spark.table(s"${name}_class"), idCol, textCol)
   }
 

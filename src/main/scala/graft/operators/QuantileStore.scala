@@ -47,33 +47,27 @@ object QuantileStore {
   def kllN(sk: Column): Column =
     GraftBridge.column(graft.functions.KllN(GraftBridge.expression(sk)))
 
-  /** `prefixes > 0` selects the PREFIX-PARTITIONED layout (v2, the
-    * NbStore/HhStore discipline): `_kll` is Hive-partitioned on
-    * pmod(xxhash64(grp), P), so a wave's merge rewrites only the
-    * partitions holding the batch's groups instead of the whole
-    * model table. Recorded in `<name>_layout`; merges auto-detect. */
-  /** `keepParams = true` (r15) skips the 1-row params rewrite — ONLY
+  /** Sketch the corpus fresh into `_kll` (one row per group) and
+    * `_kll_params`; every merge rewrites the whole groups-sized table.
+    * A rebuild is also the repair path for a torn or refused store.
+    * `keepParams = true` (r15) skips the 1-row params rewrite — ONLY
     * for callers that read `k` from this store's own params table
     * (the fold's takedown re-init, refreshCountStores): the value is
     * identical by construction, so the write is a pure fixed-cost job
     * on every deferred-takedown settle. */
   def initStore(docs: DataFrame, name: String, grpCol: String,
-      valCol: String, k: Int = 200, prefixes: Int = 0,
-      keepParams: Boolean = false): Unit = {
+      valCol: String, k: Int = 200, keepParams: Boolean = false): Unit = {
     require(k >= 8 && k <= 65535, s"k must be in [8, 65535], got $k")
     val spark = docs.sparkSession
     CountStore.setBuilding(spark, name, on = true)
     CountStore.dropLedger(spark, name)
     CountStore.clearStale(spark, name)
-    CountStore.writeLayout(spark, name, prefixes)
+    CountStore.dropLayout(spark, name)
     // disjoint outputs — overlap the sketch write with the 1-row
     // params write (r14, guide §2.6)
     graft.util.Par.run(Seq(
-      () => if (prefixes > 0)
-          CountStore.writePrefixedInit(s"${name}_kll",
-            sketched(docs, grpCol, valCol, k), "grp", prefixes)
-        else graft.sources.Sinks.parquetTable(
-          sketched(docs, grpCol, valCol, k), s"${name}_kll")) ++
+      () => graft.sources.Sinks.parquetTable(
+        sketched(docs, grpCol, valCol, k), s"${name}_kll")) ++
       (if (keepParams && spark.catalog.tableExists(s"${name}_kll_params"))
         Nil
       else Seq(() => graft.sources.Sinks.parquetTable(
@@ -91,9 +85,9 @@ object QuantileStore {
     CountStore.requireServable(spark, name)
     if (CountStore.alreadyApplied(spark, name, batchId)) false
     else {
-      val (merged, pfx, touched) = mergedWith(batch, name, grpCol, valCol)
+      val merged = mergedWith(batch, name, grpCol, valCol)
       CountStore.applyOnce(spark, name, batchId) {
-        writeKll(name, merged, pfx, touched)
+        graft.sources.Sinks.parquetTable(merged, s"${name}_kll")
       }
     }
   }
@@ -103,42 +97,21 @@ object QuantileStore {
       valCol: String): Unit = {
     val spark = batch.sparkSession
     CountStore.requireServable(spark, name)
-    val (merged, pfx, touched) = mergedWith(batch, name, grpCol, valCol)
-    writeKll(name, merged, pfx, touched)
+    graft.sources.Sinks.parquetTable(
+      mergedWith(batch, name, grpCol, valCol), s"${name}_kll")
   }
 
-  private def writeKll(name: String, merged: DataFrame, pfx: Int,
-      touched: Seq[Long]): Unit =
-    if (pfx > 0) CountStore.writePrefixed(s"${name}_kll", merged, touched)
-    else graft.sources.Sinks.parquetTable(merged, s"${name}_kll")
-
-  /** The wave merge, layout-aware: on the v2 layout only the
-    * partitions holding the batch's groups are read and re-written
-    * (a merge only moves groups the batch carries). */
+  /** The wave merge: the batch's per-group sketches merged into the
+    * stored ones, settled before the caller overwrites the store. */
   private def mergedWith(batch: DataFrame, name: String, grpCol: String,
-      valCol: String): (DataFrame, Int, Seq[Long]) = {
+      valCol: String): DataFrame = {
     val spark = batch.sparkSession
     val k = kOf(spark, name)
-    val pfx = CountStore.layoutPrefixes(spark, name)
     val bc = sketched(batch, grpCol, valCol, k).localCheckpoint()
-    val touched: Seq[Long] =
-      if (pfx > 0)
-        bc.select(CountStore.pfxCol("grp", pfx).as("p")).distinct()
-          .collect().map(_.getLong(0)).toIndexedSeq
-      else Nil
-    val store =
-      if (pfx > 0)
-        spark.table(s"${name}_kll")
-          .filter(col("tok_pfx").isin(touched: _*)).drop("tok_pfx")
-      else spark.table(s"${name}_kll")
-    val merged0 = store.unionByName(bc)
+    spark.table(s"${name}_kll").unionByName(bc)
       .groupBy(col("grp"))
       .agg(kllMergeAgg(col("sk")).as("sk"))
-    val merged = (if (pfx > 0)
-        merged0.withColumn("tok_pfx", CountStore.pfxCol("grp", pfx))
-      else merged0)
       .localCheckpoint() // settle BEFORE overwriting what we read
-    (merged, pfx, touched)
   }
 
   /** FEDERATED store merge (round 13, the HhStore.mergeStores
@@ -152,7 +125,7 @@ object QuantileStore {
     * backlog ([[CountStore.mergeStale]]) — no laundering through a
     * merge. */
   def mergeStores(spark: SparkSession, a: String, b: String,
-      out: String, prefixes: Int = 0): Unit = {
+      out: String): Unit = {
     CountStore.requireServable(spark, a)
     CountStore.requireServable(spark, b)
     require(out != a && out != b,
@@ -163,14 +136,12 @@ object QuantileStore {
     CountStore.setBuilding(spark, out, on = true)
     CountStore.dropLedger(spark, out)
     CountStore.mergeStale(spark, a, b, out)
-    CountStore.writeLayout(spark, out, prefixes)
-    val merged = spark.table(s"${a}_kll").drop("tok_pfx")
-      .unionByName(spark.table(s"${b}_kll").drop("tok_pfx"))
+    CountStore.dropLayout(spark, out)
+    val merged = spark.table(s"${a}_kll")
+      .unionByName(spark.table(s"${b}_kll"))
       .groupBy(col("grp"))
       .agg(kllMergeAgg(col("sk")).as("sk"))
-    if (prefixes > 0)
-      CountStore.writePrefixedInit(s"${out}_kll", merged, "grp", prefixes)
-    else graft.sources.Sinks.parquetTable(merged, s"${out}_kll")
+    graft.sources.Sinks.parquetTable(merged, s"${out}_kll")
     graft.sources.Sinks.parquetTable(
       spark.range(1).select(lit(ka).as("k")), s"${out}_kll_params")
     CountStore.setBuilding(spark, out, on = false)

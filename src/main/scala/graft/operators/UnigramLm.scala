@@ -268,34 +268,25 @@ object UnigramLm {
   * merging deltas of MODEL size instead of recounting the corpus. */
 object LmStore {
 
-  /** `prefixes > 0` selects the prefix-partitioned layout (v2) for
-    * all three n-gram tables (hash keys p1 / prev / token) — merges
-    * then rewrite only delta-touched partitions (the NbStore.initStore
-    * clause; ProbeR15X measured it). Recorded in `<name>_layout`. */
+  /** Count the reference fresh into the three bucketed n-gram tables.
+    * A rebuild is also the repair path for a torn or refused store. */
   def initStore(reference: DataFrame, name: String, buckets: Int = 32,
-      idCol: String = "doc_id", textCol: String = "text",
-      prefixes: Int = 0): Unit = {
+      idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = reference.sparkSession
     val (tc, bc, uc) = UnigramLm.trigramFrames(reference, idCol, textCol)
     // rebuild = the torn-commit repair path; also resets stream state
     CountStore.setBuilding(spark, name, on = true)
     CountStore.dropLedger(spark, name)
-    CountStore.writeLayout(spark, name, prefixes)
+    CountStore.dropLayout(spark, name)
     // three disjoint n-gram tables — write them concurrently (r14,
     // guide §2.6)
-    if (prefixes > 0)
-      graft.util.Par.run(
-        () => CountStore.writePrefixedInit(s"${name}_tri", tc, "p1", prefixes),
-        () => CountStore.writePrefixedInit(s"${name}_bi", bc, "prev", prefixes),
-        () => CountStore.writePrefixedInit(s"${name}_uni", uc, "token", prefixes))
-    else
-      graft.util.Par.run(
-        () => graft.sources.Sinks.parquetBucketed(tc, s"${name}_tri", buckets,
-          Seq("p1"), Seq("p1")),
-        () => graft.sources.Sinks.parquetBucketed(bc, s"${name}_bi", buckets,
-          Seq("prev"), Seq("prev")),
-        () => graft.sources.Sinks.parquetBucketed(uc, s"${name}_uni", buckets,
-          Seq("token"), Seq("token")))
+    graft.util.Par.run(
+      () => graft.sources.Sinks.parquetBucketed(tc, s"${name}_tri", buckets,
+        Seq("p1"), Seq("p1")),
+      () => graft.sources.Sinks.parquetBucketed(bc, s"${name}_bi", buckets,
+        Seq("prev"), Seq("prev")),
+      () => graft.sources.Sinks.parquetBucketed(uc, s"${name}_uni", buckets,
+        Seq("token"), Seq("token")))
     CountStore.setBuilding(spark, name, on = false)
   }
 
@@ -315,26 +306,9 @@ object LmStore {
     val spark = docs.sparkSession
     CountStore.requireServable(spark, name)
     val (dtc, dbc, duc) = UnigramLm.trigramFrames(docs, idCol, textCol)
-    val pfx = CountStore.layoutPrefixes(spark, name)
     // validate ALL THREE merges before writing ANY table; the three
     // prepares are independent settles and the three commits land in
     // disjoint tables — overlap each phase (r14, guide §2.6)
-    if (pfx > 0) {
-      val Seq((tri, tT), (bi, bT), (uni, uT)) = graft.util.Par.eval(Seq(
-        () => CountStore.preparePrefixed(s"${name}_tri", dtc,
-          Seq("p1", "p2", "cur"), Seq("c3"), sign, pfx),
-        () => CountStore.preparePrefixed(s"${name}_bi", dbc,
-          Seq("prev", "cur"), Seq("cb"), sign, pfx),
-        () => CountStore.preparePrefixed(s"${name}_uni", duc,
-          Seq("token"), Seq("cu"), sign, pfx)))
-      CountStore.setBuilding(spark, name, on = true)
-      graft.util.Par.run(
-        () => CountStore.writePrefixed(s"${name}_tri", tri, tT),
-        () => CountStore.writePrefixed(s"${name}_bi", bi, bT),
-        () => CountStore.writePrefixed(s"${name}_uni", uni, uT))
-      CountStore.setBuilding(spark, name, on = false)
-      return
-    }
     val Seq(tri, bi, uni) = graft.util.Par.eval(Seq(
       () => CountStore.prepareSigned(s"${name}_tri", dtc,
         Seq("p1", "p2", "cur"), Seq("c3"), sign),
@@ -356,10 +330,8 @@ object LmStore {
       docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       alpha: Double = 0.4): DataFrame = {
     CountStore.requireServable(spark, name)
-    UnigramLm.trigramScoreWith(docs,
-      spark.table(s"${name}_tri").drop("tok_pfx"),
-      spark.table(s"${name}_bi").drop("tok_pfx"),
-      spark.table(s"${name}_uni").drop("tok_pfx"),
+    UnigramLm.trigramScoreWith(docs, spark.table(s"${name}_tri"),
+      spark.table(s"${name}_bi"), spark.table(s"${name}_uni"),
       idCol, textCol, alpha)
   }
 
@@ -375,10 +347,8 @@ object LmStore {
       textCol: String = "text", wBigram: Double = 0.7,
       wUnigram: Double = 0.3): DataFrame = {
     CountStore.requireServable(spark, name)
-    UnigramLm.bigramScoreWith(docs,
-      spark.table(s"${name}_bi").drop("tok_pfx"),
-      spark.table(s"${name}_uni").drop("tok_pfx"),
-      idCol, textCol, wBigram, wUnigram)
+    UnigramLm.bigramScoreWith(docs, spark.table(s"${name}_bi"),
+      spark.table(s"${name}_uni"), idCol, textCol, wBigram, wUnigram)
   }
 
   /** Unigram scoring off the standing `_uni` table (the q73 form). */
@@ -405,8 +375,7 @@ object LmStore {
     * no backlog to inherit; [[CountStore.mergeStale]] runs for
     * uniformity (a no-op on fresh sides). */
   def mergeStores(spark: org.apache.spark.sql.SparkSession, a: String,
-      b: String, out: String, buckets: Int = 32,
-      prefixes: Int = 0): Unit = {
+      b: String, out: String, buckets: Int = 32): Unit = {
     CountStore.requireServable(spark, a)
     CountStore.requireServable(spark, b)
     require(out != a && out != b,
@@ -415,7 +384,7 @@ object LmStore {
     CountStore.setBuilding(spark, out, on = true)
     CountStore.dropLedger(spark, out)
     CountStore.mergeStale(spark, a, b, out)
-    CountStore.writeLayout(spark, out, prefixes)
+    CountStore.dropLayout(spark, out)
     // counts summed via FULL-OUTER co-bucketed joins, NOT
     // union+groupBy: a union of two co-bucketed scans + groupBy on
     // keys containing the bucket key plans without the merging
@@ -424,10 +393,8 @@ object LmStore {
     // (BucketedUnionHazardSpec pins both). The join is the legitimate
     // co-bucketed path: same-index buckets pair, zero shuffle.
     def summed(suffix: String, keys: Seq[String], cnt: String) = {
-      val x = spark.table(s"${a}_$suffix").drop("tok_pfx")
-        .withColumnRenamed(cnt, "__ca")
-      val y = spark.table(s"${b}_$suffix").drop("tok_pfx")
-        .withColumnRenamed(cnt, "__cb")
+      val x = spark.table(s"${a}_$suffix").withColumnRenamed(cnt, "__ca")
+      val y = spark.table(s"${b}_$suffix").withColumnRenamed(cnt, "__cb")
       x.join(y, keys, "full_outer")
         .select(keys.map(col) :+ (coalesce(col("__ca"), lit(0L)) +
           coalesce(col("__cb"), lit(0L))).as(cnt): _*)
@@ -436,19 +403,13 @@ object LmStore {
     val bi = summed("bi", Seq("prev", "cur"), "cb")
     val uni = summed("uni", Seq("token"), "cu")
     // disjoint outputs — overlap the three writes (r14, guide §2.6)
-    if (prefixes > 0)
-      graft.util.Par.run(
-        () => CountStore.writePrefixedInit(s"${out}_tri", tri, "p1", prefixes),
-        () => CountStore.writePrefixedInit(s"${out}_bi", bi, "prev", prefixes),
-        () => CountStore.writePrefixedInit(s"${out}_uni", uni, "token", prefixes))
-    else
-      graft.util.Par.run(
-        () => graft.sources.Sinks.parquetBucketed(tri, s"${out}_tri", buckets,
-          Seq("p1"), Seq("p1")),
-        () => graft.sources.Sinks.parquetBucketed(bi, s"${out}_bi", buckets,
-          Seq("prev"), Seq("prev")),
-        () => graft.sources.Sinks.parquetBucketed(uni, s"${out}_uni", buckets,
-          Seq("token"), Seq("token")))
+    graft.util.Par.run(
+      () => graft.sources.Sinks.parquetBucketed(tri, s"${out}_tri", buckets,
+        Seq("p1"), Seq("p1")),
+      () => graft.sources.Sinks.parquetBucketed(bi, s"${out}_bi", buckets,
+        Seq("prev"), Seq("prev")),
+      () => graft.sources.Sinks.parquetBucketed(uni, s"${out}_uni", buckets,
+        Seq("token"), Seq("token")))
     CountStore.setBuilding(spark, out, on = false)
   }
 
@@ -483,31 +444,16 @@ object LmStore {
     if (CountStore.alreadyApplied(spark, name, batchId)) false
     else {
       val (dtc, dbc, duc) = UnigramLm.trigramFrames(batch, idCol, textCol)
-      val pfx = CountStore.layoutPrefixes(spark, name)
-      if (pfx > 0) {
-        val (tri, tT) = CountStore.preparePrefixed(s"${name}_tri", dtc,
-          Seq("p1", "p2", "cur"), Seq("c3"), sign = 1L, pfx)
-        val (bi, bT) = CountStore.preparePrefixed(s"${name}_bi", dbc,
-          Seq("prev", "cur"), Seq("cb"), sign = 1L, pfx)
-        val (uni, uT) = CountStore.preparePrefixed(s"${name}_uni", duc,
-          Seq("token"), Seq("cu"), sign = 1L, pfx)
-        CountStore.applyOnce(spark, name, batchId) {
-          CountStore.writePrefixed(s"${name}_tri", tri, tT)
-          CountStore.writePrefixed(s"${name}_bi", bi, bT)
-          CountStore.writePrefixed(s"${name}_uni", uni, uT)
-        }
-      } else {
-        val tri = CountStore.prepareSigned(s"${name}_tri", dtc,
-          Seq("p1", "p2", "cur"), Seq("c3"), sign = 1L)
-        val bi = CountStore.prepareSigned(s"${name}_bi", dbc,
-          Seq("prev", "cur"), Seq("cb"), sign = 1L)
-        val uni = CountStore.prepareSigned(s"${name}_uni", duc,
-          Seq("token"), Seq("cu"), sign = 1L)
-        CountStore.applyOnce(spark, name, batchId) {
-          CountStore.write(s"${name}_tri", tri, buckets, Seq("p1"))
-          CountStore.write(s"${name}_bi", bi, buckets, Seq("prev"))
-          CountStore.write(s"${name}_uni", uni, buckets, Seq("token"))
-        }
+      val tri = CountStore.prepareSigned(s"${name}_tri", dtc,
+        Seq("p1", "p2", "cur"), Seq("c3"), sign = 1L)
+      val bi = CountStore.prepareSigned(s"${name}_bi", dbc,
+        Seq("prev", "cur"), Seq("cb"), sign = 1L)
+      val uni = CountStore.prepareSigned(s"${name}_uni", duc,
+        Seq("token"), Seq("cu"), sign = 1L)
+      CountStore.applyOnce(spark, name, batchId) {
+        CountStore.write(s"${name}_tri", tri, buckets, Seq("p1"))
+        CountStore.write(s"${name}_bi", bi, buckets, Seq("prev"))
+        CountStore.write(s"${name}_uni", uni, buckets, Seq("token"))
       }
     }
   }

@@ -209,29 +209,22 @@ object WeightedSample {
 object SampleStore {
   import org.apache.spark.sql.SparkSession
 
-  /** `prefixes > 0` selects the PREFIX-PARTITIONED layout (v2, the
-    * NbStore/HhStore discipline): `_sample` is Hive-partitioned on
-    * pmod(xxhash64(grp), P), so a wave's merge (or a takedown's
-    * group refit) rewrites only the partitions holding the touched
-    * groups instead of the whole table. Recorded in `<name>_layout`;
-    * merges auto-detect. */
+  /** Sample the corpus fresh into `_sample` and `_sample_params`;
+    * every merge rewrites the whole k × groups table. A rebuild is
+    * also the repair path for a torn or refused store. */
   def initStore(docs: DataFrame, name: String, grpCol: String,
-      idCol: String, weightCol: String, k: Int, prefixes: Int = 0): Unit = {
+      idCol: String, weightCol: String, k: Int): Unit = {
     require(k > 0, s"k must be positive, got $k")
     val spark = docs.sparkSession
     CountStore.setBuilding(spark, name, on = true)
     CountStore.dropLedger(spark, name)
     clearStaleAll(spark, name)
-    CountStore.writeLayout(spark, name, prefixes)
+    CountStore.dropLayout(spark, name)
     // disjoint outputs — overlap the sample write with the 1-row
     // params write (r14, guide §2.6)
     graft.util.Par.run(
-      () => if (prefixes > 0)
-          CountStore.writePrefixedInit(s"${name}_sample",
-            topK(canon(docs, grpCol, idCol, weightCol), k), "grp", prefixes)
-        else graft.sources.Sinks.parquetTable(
-          topK(canon(docs, grpCol, idCol, weightCol), k),
-          s"${name}_sample"),
+      () => graft.sources.Sinks.parquetTable(
+        topK(canon(docs, grpCol, idCol, weightCol), k), s"${name}_sample"),
       () => graft.sources.Sinks.parquetTable(
         spark.range(1).select(lit(k).as("k")), s"${name}_sample_params"))
     CountStore.setBuilding(spark, name, on = false)
@@ -246,10 +239,9 @@ object SampleStore {
     CountStore.requireServable(spark, name)
     if (CountStore.alreadyApplied(spark, name, batchId)) false
     else {
-      val (merged, pfx, touched) = mergedWith(batch, name, grpCol, idCol,
-        weightCol)
+      val merged = mergedWith(batch, name, grpCol, idCol, weightCol)
       CountStore.applyOnce(spark, name, batchId) {
-        writeSample(name, merged, pfx, touched)
+        graft.sources.Sinks.parquetTable(merged, s"${name}_sample")
       }
     }
   }
@@ -262,41 +254,19 @@ object SampleStore {
       idCol: String, weightCol: String): Unit = {
     val spark = batch.sparkSession
     CountStore.requireServable(spark, name)
-    val (merged, pfx, touched) = mergedWith(batch, name, grpCol, idCol,
-      weightCol)
-    writeSample(name, merged, pfx, touched)
+    graft.sources.Sinks.parquetTable(
+      mergedWith(batch, name, grpCol, idCol, weightCol), s"${name}_sample")
   }
 
-  private def writeSample(name: String, merged: DataFrame, pfx: Int,
-      touched: Seq[Long]): Unit =
-    if (pfx > 0) CountStore.writePrefixed(s"${name}_sample", merged, touched)
-    else graft.sources.Sinks.parquetTable(merged, s"${name}_sample")
-
-  /** The wave merge, layout-aware: on the v2 layout only the
-    * partitions holding the batch's groups are read and re-written
-    * (a merge only moves groups the batch carries). */
+  /** The wave merge: the stored sample and the batch through the same
+    * top-k combiner, settled before the caller overwrites the store. */
   private def mergedWith(batch: DataFrame, name: String, grpCol: String,
-      idCol: String, weightCol: String): (DataFrame, Int, Seq[Long]) = {
+      idCol: String, weightCol: String): DataFrame = {
     val spark = batch.sparkSession
     val k = spark.table(s"${name}_sample_params").head().getAs[Int]("k")
-    val pfx = CountStore.layoutPrefixes(spark, name)
     val bc = canon(batch, grpCol, idCol, weightCol).localCheckpoint()
-    val touched: Seq[Long] =
-      if (pfx > 0)
-        bc.select(CountStore.pfxCol("grp", pfx).as("p")).distinct()
-          .collect().map(_.getLong(0)).toIndexedSeq
-      else Nil
-    val store =
-      if (pfx > 0)
-        spark.table(s"${name}_sample")
-          .filter(col("tok_pfx").isin(touched: _*)).drop("tok_pfx")
-      else spark.table(s"${name}_sample")
-    val merged0 = topK(store.unionByName(bc), k)
-    val merged = (if (pfx > 0)
-        merged0.withColumn("tok_pfx", CountStore.pfxCol("grp", pfx))
-      else merged0)
+    topK(spark.table(s"${name}_sample").unionByName(bc), k)
       .localCheckpoint() // settle BEFORE overwriting what we read
-    (merged, pfx, touched)
   }
 
   /** TAKEDOWN/EDIT support for the admission fold. The sample's
@@ -317,37 +287,21 @@ object SampleStore {
       liveDocs: => DataFrame, grpCol: String, idCol: String,
       weightCol: String): Unit = {
     CountStore.requireServable(spark, name)
-    val pfx = CountStore.layoutPrefixes(spark, name)
-    val store = spark.table(s"${name}_sample").drop("tok_pfx")
+    val store = spark.table(s"${name}_sample")
     val gone = goneIds
       .select(col(goneIds.columns.head).cast("long").as("id")).distinct()
       .localCheckpoint()
-    // the id-membership probe reads the (model-sized) store — ids are
-    // not the partition key, so it cannot prefix-prune; only the
-    // REWRITE below is pruned to the hit groups' partitions
+    // the id-membership probe reads the (model-sized) store
     val hitGroups = store.join(broadcast(gone), Seq("id"), "left_semi")
       .select(col("grp")).distinct().localCheckpoint()
     if (!hitGroups.isEmpty) {
       val k = spark.table(s"${name}_sample_params").head().getAs[Int]("k")
       val fresh = topK(canon(liveDocs, grpCol, idCol, weightCol)
         .join(broadcast(hitGroups), Seq("grp"), "left_semi"), k)
-      if (pfx > 0) {
-        val touched = hitGroups
-          .select(CountStore.pfxCol("grp", pfx).as("p")).distinct()
-          .collect().map(_.getLong(0)).toIndexedSeq
-        val merged = spark.table(s"${name}_sample")
-          .filter(col("tok_pfx").isin(touched: _*)).drop("tok_pfx")
-          .join(broadcast(hitGroups), Seq("grp"), "left_anti")
-          .unionByName(fresh)
-          .withColumn("tok_pfx", CountStore.pfxCol("grp", pfx))
-          .localCheckpoint() // settle BEFORE overwriting what we read
-        CountStore.writePrefixed(s"${name}_sample", merged, touched)
-      } else {
-        val merged = store.join(broadcast(hitGroups), Seq("grp"), "left_anti")
-          .unionByName(fresh)
-          .localCheckpoint() // settle BEFORE overwriting what we read
-        graft.sources.Sinks.parquetTable(merged, s"${name}_sample")
-      }
+      val merged = store.join(broadcast(hitGroups), Seq("grp"), "left_anti")
+        .unionByName(fresh)
+        .localCheckpoint() // settle BEFORE overwriting what we read
+      graft.sources.Sinks.parquetTable(merged, s"${name}_sample")
     }
   }
 
@@ -426,7 +380,7 @@ object SampleStore {
     * riding a stale side's sample stays visibly pending and the next
     * [[refitStale]] (over the union corpus) prunes it. */
   def mergeStores(spark: SparkSession, a: String, b: String,
-      out: String, prefixes: Int = 0): Unit = {
+      out: String): Unit = {
     CountStore.requireServable(spark, a)
     CountStore.requireServable(spark, b)
     require(out != a && out != b,
@@ -440,12 +394,10 @@ object SampleStore {
     CountStore.dropLedger(spark, out)
     CountStore.mergeStale(spark, a, b, out)
     mergeStaleIds(spark, a, b, out)
-    CountStore.writeLayout(spark, out, prefixes)
-    val merged = topK(spark.table(s"${a}_sample").drop("tok_pfx")
-      .unionByName(spark.table(s"${b}_sample").drop("tok_pfx")), ka)
-    if (prefixes > 0)
-      CountStore.writePrefixedInit(s"${out}_sample", merged, "grp", prefixes)
-    else graft.sources.Sinks.parquetTable(merged, s"${out}_sample")
+    CountStore.dropLayout(spark, out)
+    val merged = topK(spark.table(s"${a}_sample")
+      .unionByName(spark.table(s"${b}_sample")), ka)
+    graft.sources.Sinks.parquetTable(merged, s"${out}_sample")
     graft.sources.Sinks.parquetTable(
       spark.range(1).select(lit(ka).as("k")), s"${out}_sample_params")
     CountStore.setBuilding(spark, out, on = false)
@@ -467,9 +419,7 @@ object SampleStore {
   def sample(spark: SparkSession, name: String): DataFrame = {
     CountStore.requireServable(spark, name)
     val k = spark.table(s"${name}_sample_params").head().getAs[Int]("k")
-    // drop hides the v2 partition scaffolding (no-op on plain layout)
-    WeightedSample.perKey(spark.table(s"${name}_sample").drop("tok_pfx"),
-      "grp", "id", "w", k)
+    WeightedSample.perKey(spark.table(s"${name}_sample"), "grp", "id", "w", k)
   }
 
   /** Serve-with-staleness-bound (r12 verdict #4): refresh-then-serve

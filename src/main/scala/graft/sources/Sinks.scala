@@ -202,51 +202,6 @@ object Sinks {
         s"dropTable: could not delete stale location $loc")
   }
 
-  /** Serializes the partitionOverwriteMode set/insert/restore window in
-    * [[insertPartitionsDynamic]] across Par threads. */
-  private val overwriteModeLock = new Object
-
-  /** THE engine's one partitioned-`insertInto` path (r14 verdict #3 →
-    * r15): dynamically overwrite exactly the partitions present in
-    * `rows`. The dynamic-overwrite toggle is a SESSION conf — the
-    * writer-level `option("partitionOverwriteMode", ...)` is honored by
-    * path writes like [[shardedRefresh]] but NOT by `insertInto` (r14
-    * verified: with only the option, the insert fell back to static and
-    * rewrote every partition). Store mutations overlap (guide §2.6 /
-    * graft.util.Par), so the set/insert/restore runs under a global
-    * lock to keep two concurrent inserts from corrupting each other's
-    * saved value. A concurrent NON-partitioned engine write observing
-    * the temporary dynamic mode is harmless: unpartitioned overwrites
-    * and bucketed saveAsTable ignore the mode, appends ignore overwrite
-    * semantics entirely, and fresh partitioned creates have no existing
-    * partitions to preserve.
-    *
-    * INVARIANT (why this lives here): the lock is sound only while this
-    * is the ONLY partitioned `insertInto` site in the engine — a bare
-    * `insertInto` added elsewhere would silently inherit dynamic mode
-    * whenever it raced this window. Do not call
-    * `.write.mode("overwrite").insertInto(...)` anywhere else; route it
-    * through here (SinksSpec greps the source tree to enforce it). */
-  def insertPartitionsDynamic(table: String, rows: DataFrame): Unit = {
-    val spark = rows.sparkSession
-    overwriteModeLock.synchronized {
-      val mode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        // insertInto is positional: order columns as the table stores
-        // them (data columns first, the partition column last)
-        import org.apache.spark.sql.functions.col
-        rows.select(spark.table(table).columns.map(col).toIndexedSeq: _*)
-          .write.mode("overwrite").insertInto(table)
-      } finally mode match {
-        case Some(m) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
-
   /** Plain managed parquet table, replaced location-safely (see
     * [[dropTable]] for why overwrite alone is not enough). */
   def parquetTable(df: DataFrame, table: String): Unit = {

@@ -1155,13 +1155,8 @@ object IndexMaintenance {
       unionOnly(name, exists)(
         init = () => HhStore.initStore(
           hhItems(put, grpCol, textCol), name, "grp", "item", k),
-        // re-init preserves the store's declared v2 prefix layout (r12
-        // advice, medium: a prefix-partitioned store silently rewritten
-        // plain on its first takedown refit discards the partition
-        // pruning the layout was declared for)
         reinitLive = () => HhStore.initStore(
-          hhItems(liveOnce, grpCol, textCol), name, "grp", "item", k,
-          prefixes = CountStore.layoutPrefixes(spark, name)),
+          hhItems(liveOnce, grpCol, textCol), name, "grp", "item", k),
         merge = () => HhStore.mergeDocs(
           hhItems(put, grpCol, textCol), name, "grp", "item"),
         departureNeedsReinit = heavyTouched)
@@ -1170,12 +1165,10 @@ object IndexMaintenance {
       val exists = spark.catalog.tableExists(s"${name}_kll")
       unionOnly(name, exists)(
         init = () => QuantileStore.initStore(put, name, grpCol, valCol),
-        // preserves both the store's own k and its declared layout;
-        // keepParams: k was just read from the store (r15)
+        // preserves the store's own k; keepParams: k was just read from
+        // the store (r15)
         reinitLive = () => QuantileStore.initStore(liveOnce, name, grpCol,
-          valCol, k = QuantileStore.kOf(spark, name),
-          prefixes = CountStore.layoutPrefixes(spark, name),
-          keepParams = true),
+          valCol, k = QuantileStore.kOf(spark, name), keepParams = true),
         merge = () => QuantileStore.mergeDocs(put, name, grpCol, valCol))
     }
     graft.util.Par.run(
@@ -1215,22 +1208,19 @@ object IndexMaintenance {
     def stale(name: String) = knownStale ||
       CountStore.stalePending(spark, name)._1 > 0
     lazy val live = CorpusLog.live(spark, logName, idCol).localCheckpoint()
-    // re-inits preserve each store's own params and declared prefix
-    // layout (r12 advice, medium) — same as the fold's threshold refit
+    // re-inits preserve each store's own params (r12 advice, medium) —
+    // same as the fold's threshold refit
     sketchStore.foreach { case (name, grpCol) =>
       if (stale(name)) SketchStore.initStore(live, name, grpCol, idCol,
         lgK = SketchStore.lgKOf(spark, name), keepParams = true)
     }
     hhStore.foreach { case (name, grpCol, k) =>
       if (stale(name))
-        HhStore.initStore(hhItems(live, grpCol, textCol), name, "grp", "item",
-          k, prefixes = CountStore.layoutPrefixes(spark, name))
+        HhStore.initStore(hhItems(live, grpCol, textCol), name, "grp", "item", k)
     }
     quantileStore.foreach { case (name, grpCol, valCol) =>
       if (stale(name)) QuantileStore.initStore(live, name, grpCol, valCol,
-        k = QuantileStore.kOf(spark, name),
-        prefixes = CountStore.layoutPrefixes(spark, name),
-        keepParams = true)
+        k = QuantileStore.kOf(spark, name), keepParams = true)
     }
     // the sample family refits only the groups its pending departed
     // ids touch (group-pruned, not a full rebuild — refitStale reads

@@ -49,6 +49,17 @@ class NbStoreSpec extends SparkSpec {
     assert(spark.table("nbspec_neg_counts").collect().toSet === before)
   }
 
+  test("removing every doc empties the store; a later append still merges") {
+    val one = labeled((1L, "solo solitary", "a"))
+    NbStore.initStore(one, "nbspec_empty", buckets = 4)
+    NbStore.removeDocs(one, "nbspec_empty", buckets = 4)
+    assert(spark.table("nbspec_empty_counts").isEmpty,
+      "rows survived a full cancellation")
+    assert(spark.table("nbspec_empty_class").isEmpty)
+    NbStore.appendDocs(labeled((2L, "fresh start", "b")), "nbspec_empty", buckets = 4)
+    assert(spark.table("nbspec_empty_counts").count() === 2)
+  }
+
   test("classifyFromStore serves the argmax with the in-memory tie-break") {
     val train = labeled((1L, "a a", "m"), (2L, "b b", "k"))
     NbStore.initStore(train, "nbspec_tie", buckets = 4)
@@ -203,6 +214,40 @@ class NbStoreSpec extends SparkSpec {
     NbStore.initStore(labeled((1L, "a a", "x")), "nbspec_torn", buckets = 4)
     assert(NbStore.scoreFromStore(spark, "nbspec_torn",
       Seq((5L, "a")).toDF("doc_id", "text")).count() > 0)
+  }
+
+  test("a store left in the removed prefix-partitioned layout is refused by name; initStore repairs") {
+    val name = "nbspec_v2left"
+    val train = labeled((1L, "a a", "x"))
+    val probe = Seq((5L, "a")).toDF("doc_id", "text")
+    def refusedEverywhere(): Unit =
+      Seq[(String, () => Any)](
+        "serve" -> (() => NbStore.scoreFromStore(spark, name, probe).collect()),
+        "appendDocs" -> (() =>
+          NbStore.appendDocs(labeled((2L, "b", "x")), name, buckets = 4)),
+        "describeStore" -> (() => NbStore.describeStore(spark, name).collect())
+      ).foreach { case (face, run) =>
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains(s"count store '$name' was written in the " +
+          "removed prefix-partitioned layout") &&
+          e.getMessage.contains("rebuild it with initStore"), s"$face: ${e.getMessage}")
+      }
+    NbStore.initStore(train, name, buckets = 4)
+    // the declaration table that layout wrote next to the store
+    graft.sources.Sinks.parquetTable(
+      spark.range(1).select(lit(8).as("prefixes")), s"${name}_layout")
+    refusedEverywhere()
+    NbStore.initStore(train, name, buckets = 4)
+    assert(!spark.catalog.tableExists(s"${name}_layout"))
+    assert(NbStore.scoreFromStore(spark, name, probe).count() > 0)
+    // only its warehouse directory: a new session's catalog does not
+    // know the table, the directory is still there
+    val dir = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), s"${name}_layout")
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(dir)
+    refusedEverywhere()
+    NbStore.initStore(train, name, buckets = 4)
+    assert(NbStore.scoreFromStore(spark, name, probe).count() > 0)
   }
 
   test("describeStore reports exact model metrics incl the streaming ledger") {

@@ -227,4 +227,76 @@ class PqSpec extends SparkSpec {
         t + "_pq", t + "_pq_rb", t + "_pq_tombstones"))
       spark.sql(s"DROP TABLE IF EXISTS $n")
   }
+
+  // A small fixture of 8-dim vectors plus, per case, one bad row: a
+  // longer vector, a shorter one, and a null one.
+  private def vectorCases() = {
+    import spark.implicits._
+    val dim = 8
+    val base = (1 to 40).map(i => i.toLong ->
+      Array.tabulate(dim)(j => ((i * 7 + j * 3) % 11).toFloat)).toDF("vec_id", "embedding")
+    val bad = Seq(
+      Array.fill(dim + 1)(0.5f) -> s"vector has ${dim + 1} dims, expected $dim",
+      Array.fill(dim - 1)(0.5f) -> s"vector has ${dim - 1} dims, expected $dim",
+      (null: Array[Float]) -> "vector is null")
+      .map { case (v, why) => Seq(99L -> v).toDF("vec_id", "embedding") -> why }
+    (base, bad)
+  }
+
+  private def asQueries(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
+
+  test("IVF rejects null and wrong-length vectors by name in fit and every cell assignment") {
+    val (base, bad) = vectorCases()
+    val ivf = IvfIndex(nlist = 4, nprobe = 2, seed = 1L).fit(base)
+    bad.foreach { case (row, why) =>
+      Seq[(String, () => Any)](
+        "assignCells" -> (() => ivf.assignCells(row, "embedding", 1).collect()),
+        "knnJoin corpus" -> (() =>
+          ivf.knnJoin(base.unionByName(row), asQueries(base), 5).collect()),
+        "knnJoin query" -> (() => ivf.knnJoin(base, asQueries(row), 5).collect()),
+        // the dist filter lets Catalyst infer isnotnull on the query vector
+        "radiusJoin query" -> (() =>
+          ivf.radiusJoin(base, asQueries(row), 1.0).collect())
+      ).foreach { case (face, run) =>
+        val e = intercept[Exception](run())
+        assert(messages(e).contains(s"IVF cell assignment: $why"), s"$face: ${messages(e)}")
+      }
+    }
+    val Seq(longer, _, nul) = bad.map(_._1)
+    val e1 = intercept[IllegalArgumentException](
+      IvfIndex(nlist = 4, seed = 1L).fit(base.unionByName(longer)))
+    assert(e1.getMessage.contains("IVF fit: training vectors in embedding have 8, 9 dims"),
+      e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      IvfIndex(nlist = 4, seed = 1L).fit(base.unionByName(nul)))
+    assert(e2.getMessage.contains("IVF fit: a training vector in embedding is null"),
+      e2.getMessage)
+  }
+
+  test("PQ rejects null and wrong-length vectors by name in fit, encode and knnJoin") {
+    val (base, bad) = vectorCases()
+    val pq = PqIndex(m = 2, seed = 1L).fit(base)
+    val codes = pq.encode(base).select("vec_id", "pq_code")
+    bad.foreach { case (row, why) =>
+      val e = intercept[Exception](pq.encode(row).collect())
+      assert(messages(e).contains(s"PQ encode: $why"), messages(e))
+    }
+    val Seq(longer, shorter, nul) = bad.map(_._1)
+    Seq(longer -> "query 99 has 9 dims, expected 8",
+        shorter -> "query 99 has 7 dims, expected 8",
+        nul -> "query 99 has a null vector").foreach { case (row, why) =>
+      val e = intercept[IllegalArgumentException](
+        pq.knnJoin(codes, asQueries(row), 5).collect())
+      assert(e.getMessage.contains(s"PQ knnJoin: $why"), e.getMessage)
+    }
+    val e1 = intercept[IllegalArgumentException](
+      PqIndex(m = 2, seed = 1L).fit(base.unionByName(shorter)))
+    assert(e1.getMessage.contains("PQ fit: training vectors in embedding have 7, 8 dims"),
+      e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      PqIndex(m = 2, seed = 1L).fit(base.unionByName(nul)))
+    assert(e2.getMessage.contains("PQ fit: a training vector in embedding is null"),
+      e2.getMessage)
+  }
 }

@@ -399,24 +399,25 @@ class SinksAndAggSpec extends SparkSpec {
 
   test("insertInto appears ONLY inside Sinks.insertPartitionsDynamic " +
       "(the locked dynamic-overwrite invariant, r15)") {
-    // The partitionOverwriteMode toggle is a SESSION conf under a
-    // global lock (Sinks.insertPartitionsDynamic). The lock is sound
-    // only while that helper is the engine's ONE partitioned-insertInto
-    // site — a bare insertInto added anywhere else silently inherits
-    // dynamic mode whenever it races the locked window. This grep keeps
-    // the invariant alive across rounds.
+    // Name kept from when Sinks.insertPartitionsDynamic was the one
+    // insertInto site; the prefix-partitioned count-store layout that
+    // needed it is gone, so no insertInto may appear at all. A
+    // partitioned insertInto honours only the SESSION-wide
+    // partitionOverwriteMode (not the writer option shardedRefresh
+    // uses), so one would bring back a shared conf toggle and the
+    // global lock it needed.
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     val offenders = java.nio.file.Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(_.toString.endsWith("sources/Sinks.scala"))
       .flatMap { p =>
         val src = new String(java.nio.file.Files.readAllBytes(p))
         if (src.contains(".insertInto(")) Some(p.toString) else None
       }.toSeq
     assert(offenders.isEmpty,
-      s"bare insertInto outside Sinks.insertPartitionsDynamic: $offenders — " +
-        "route partitioned inserts through the locked helper")
+      s"insertInto under src/main: $offenders — write managed tables " +
+        "with saveAsTable (Sinks.parquetTable / parquetBucketed) and " +
+        "partitioned paths with a writer-level partitionOverwriteMode")
   }
 
   test("the only mains are Bench, Verify, Main and the four kept tools") {
